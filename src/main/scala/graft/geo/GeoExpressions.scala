@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.geom.{Coordinate, Geometry, Location}
 
 /** Native Catalyst expressions for geometry predicates over WKB binary
   * columns. These replace the reference's shapely/GeoPandas per-row Python
@@ -39,7 +39,7 @@ object GeoExpressions {
 
   /** Fused polygon-covers-point predicate over raw coordinates: no WKB
     * point round-trip, and the (few, repeated after a broadcast join)
-    * polygon geometries are prepared once per thread and cached — the
+    * polygon geometries are prepared once per JVM and shared — the
     * "prepare-once, batch-evaluate" vectorized-PIP shape (north rule R8).
     */
   def st_covers_point(geom: Column, x: Column, y: Column): Column =
@@ -96,7 +96,8 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
     * scaling wall (ProfileScaling: encode 0.81 eff, join 0.66). Here the
     * key/x/y are unboxed and the WKB child's code is emitted INSIDE the
     * cache-miss branch, so the hit path (every row after the first per
-    * polygon per thread) allocates nothing and never touches the bytes.
+    * polygon per JVM) never touches the bytes and allocates at most the
+    * one Coordinate the point locator reads.
     *
     * INVARIANT (required for codegen/interpreted agreement): the key
     * child MUST be `st_geom_key(geom)` over the SAME geometry child — a
@@ -147,7 +148,7 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
 }
 
 /** (polyWkb, x, y) -> boolean; prepared-geometry cache keyed by WKB
-  * content hash (thread-local, bounded).
+  * content hash (JVM-wide, bounded).
   */
 case class StPredicatePoint(first: Expression, second: Expression,
     third: Expression, op: String)
@@ -166,20 +167,22 @@ case class StPredicatePoint(first: Expression, second: Expression,
       f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }
 
-/** Thread-confined point-predicate evaluator for ONE geometry, built
-  * once per (thread, geometry) and cached. Three tiers, cheapest exact
-  * method first:
+/** Immutable point-predicate evaluator for ONE geometry, built once per
+  * JVM and shared by every task thread through the tester table in
+  * [[StPredicatePoint]]. Three tiers, cheapest exact method first:
   *  - axis-aligned rectangle: the envelope test IS the covers test
   *    (4 double compares per row; JTS's own Geometry.covers applies the
   *    same shortcut) and strict envelope interiority is contains;
   *  - any other polygonal geometry: envelope reject then
-  *    IndexedPointInAreaLocator.locate on a reused Coordinate —
+  *    IndexedPointInAreaLocator.locate on a fresh Coordinate —
   *    covers == not EXTERIOR, contains == INTERIOR, no Point object, no
   *    per-row envelope realloc (the prepared-geometry path allocated an
-  *    Envelope via geometryChanged + visitor objects per call — the
-  *    largest remaining garbage source in the spatial join's refine);
-  *  - non-polygonal geometry: PreparedGeometry with a private mutable
-  *    Point (rare — point/line dims in a PIP join).
+  *    Envelope via geometryChanged + visitor objects per call);
+  *  - non-polygonal geometry: PreparedGeometry against a fresh Point
+  *    (rare — point/line dims in a PIP join).
+  * Sharing is safe because no call writes to this object, and JTS 1.20
+  * builds the locator's and the prepared geometry's lazy indexes under
+  * a lock and publishes them through volatile fields.
   */
 final class PointTester(geom: Geometry) {
   private val env = geom.getEnvelopeInternal
@@ -193,45 +196,44 @@ final class PointTester(geom: Geometry) {
   private val prepared =
     if (rect || locator != null) null
     else org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(geom)
-  private val coord = new org.locationtech.jts.geom.Coordinate(0, 0)
-  private val pt =
-    if (prepared != null) Wkb.factory.createPoint(new org.locationtech.jts.geom.Coordinate(0, 0))
-    else null
 
   def covers(x: Double, y: Double): Boolean = {
     if (x < minX || x > maxX || y < minY || y > maxY) false
     else if (rect) true
-    else if (locator != null) {
-      coord.x = x; coord.y = y
-      locator.locate(coord) != org.locationtech.jts.geom.Location.EXTERIOR
-    } else slowPath(x, y, contains = false)
+    else if (locator != null)
+      locator.locate(new Coordinate(x, y)) != Location.EXTERIOR
+    else prepared.covers(Wkb.point(x, y))
   }
 
   def contains(x: Double, y: Double): Boolean = {
     if (rect) x > minX && x < maxX && y > minY && y < maxY
     else if (x < minX || x > maxX || y < minY || y > maxY) false
-    else if (locator != null) {
-      coord.x = x; coord.y = y
-      locator.locate(coord) == org.locationtech.jts.geom.Location.INTERIOR
-    } else slowPath(x, y, contains = true)
-  }
-
-  private def slowPath(x: Double, y: Double, contains: Boolean): Boolean = {
-    val c = pt.getCoordinate
-    c.x = x; c.y = y
-    pt.geometryChanged()
-    if (contains) prepared.contains(pt) else prepared.covers(pt)
+    else if (locator != null)
+      locator.locate(new Coordinate(x, y)) == Location.INTERIOR
+    else prepared.contains(Wkb.point(x, y))
   }
 }
 
 object StPredicatePoint {
-  private val cache = ThreadLocal.withInitial[
-      java.util.LinkedHashMap[java.lang.Long, PointTester]](
-    () => new java.util.LinkedHashMap[java.lang.Long, PointTester](
-        1024, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[java.lang.Long,
-          PointTester]): Boolean = size() > 512
-    })
+  /** Most testers the table holds: enough to keep a broadcast side of a
+    * few thousand polygons resident (the benchmark's tile join has 2,000)
+    * while bounding the heap. A tester retains about 145 B per polygon
+    * vertex (measured on JDK 17: 7.0 KB at 48 vertices, 141 KB at 1,000),
+    * so a full table is 28.5 MB of heap for 48-vertex polygons and about
+    * 580 MB for 1,000-vertex ones.
+    */
+  private[graft] val TesterBound = 4096
+
+  /** JVM-wide tester table keyed by geometry content hash: every task
+    * thread reads the one tester built for a polygon. Reads take no lock;
+    * inserts are serialised so the table never exceeds [[TesterBound]],
+    * and an insert into a full table first empties it (testers still
+    * held by running threads stay valid, as they are immutable).
+    */
+  private val testers =
+    new java.util.concurrent.ConcurrentHashMap[java.lang.Long, PointTester]()
+
+  private[graft] def testerCount: Int = testers.size
 
   private[graft] def hashBytes(b: Array[Byte]): Long = {
     var h = 0xcbf29ce484222325L
@@ -249,18 +251,23 @@ object StPredicatePoint {
   }
 
   /** Hit-path lookup for the codegen'd predicate: no boxing beyond the
-    * Long key, no WKB access. Returns null on miss.
+    * Long key, no WKB access, no lock. Returns null on miss.
     */
   def testerByKeyOrNull(keyHash: Long): PointTester =
-    cache.get().get(java.lang.Long.valueOf(keyHash))
+    testers.get(java.lang.Long.valueOf(keyHash))
 
-  /** Miss-path insert: build the tester from the WKB (first sight of
-    * this geometry on this thread) and cache.
+  /** Miss-path insert: build the tester from the WKB outside the lock and
+    * return whichever tester the table holds for the key, so threads
+    * racing on one polygon all use the first one published.
     */
   def testerByKeyPut(keyHash: Long, wkb: Array[Byte]): PointTester = {
     val t = new PointTester(Wkb.read(wkb))
-    cache.get().put(java.lang.Long.valueOf(keyHash), t)
-    t
+    val k = java.lang.Long.valueOf(keyHash)
+    testers.synchronized {
+      if (testers.size >= TesterBound && !testers.containsKey(k)) testers.clear()
+      val prior = testers.putIfAbsent(k, t)
+      if (prior != null) prior else t
+    }
   }
 
   /** Predicate dispatch for interpreted eval and generated code. */
@@ -379,38 +386,4 @@ case class StGeomFromText(child: Expression)
   override protected def nullSafeEval(v: Any): Any =
     Wkb.write(Wkb.readWkt(v.asInstanceOf[UTF8String].toString))
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** Vectorized point-in-polygon refine (north-rule R8): the polygon side is
-  * broadcast as a map of polygonId -> PreparedGeometry (prepare once per
-  * polygon per JVM), and each probe evaluates `PreparedGeometry.covers`
-  * against raw (x, y) doubles without even decoding point WKB.
-  */
-case class PipPrepared(
-    polyId: Expression, x: Expression, y: Expression,
-    polys: scala.collection.Map[Long, Array[Byte]])
-    extends Expression with CodegenFallback {
-  override def children: Seq[Expression] = Seq(polyId, x, y)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-
-  @transient private lazy val prepared = {
-    val pf = new org.locationtech.jts.geom.prep.PreparedGeometryFactory
-    polys.map { case (id, wkb) => id -> pf.create(Wkb.read(wkb)) }
-  }
-  @transient private lazy val pointFactory = Wkb.factory
-
-  override def eval(input: InternalRow): Any = {
-    val id = polyId.eval(input).asInstanceOf[Long]
-    val px = x.eval(input).asInstanceOf[Double]
-    val py = y.eval(input).asInstanceOf[Double]
-    prepared.get(id) match {
-      case Some(pg) => pg.covers(pointFactory.createPoint(
-        new org.locationtech.jts.geom.Coordinate(px, py)))
-      case None => false
-    }
-  }
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression =
-    copy(polyId = newChildren(0), x = newChildren(1), y = newChildren(2))
 }

@@ -96,4 +96,64 @@ class GeoExprSpec extends SparkSpec {
     assert(ids(5) == graft.index.H3.parent(ids(4), 7))
     assert(st.getLong(1) == graft.index.S2.cellId(m(2), m(3), 12))
   }
+
+  test("shared point testers answer like JTS from 4 threads; the table stays bounded") {
+    import graft.geo.StPredicatePoint
+    val star = (0 until 48).map { v =>
+      val a = 2 * math.Pi * v / 48
+      val r = 30.0 + 15.0 * ((v * 7919) % 13) / 12.0
+      s"${50 + r * math.cos(a)} ${50 + r * math.sin(a)}"
+    }
+    val shapes = Seq(
+      "POLYGON ((0 0, 100 0, 100 80, 0 80, 0 0))",
+      (star :+ star.head).mkString("POLYGON ((", ", ", "))"),
+      "POLYGON ((0 0, 100 0, 100 100, 0 100, 0 0), (30 30, 70 30, 50 70, 30 30))",
+      "LINESTRING (0 0, 50 50, 100 0)").map(Wkb.readWkt)
+    val wkbs = shapes.map(Wkb.write)
+    // a 2.5-unit grid puts points on box edges, hole edges and the line
+    val points = for (i <- 0 to 44; j <- 0 to 44) yield (-5 + 2.5 * i, -5 + 2.5 * j)
+    def jts(s: Int, p: Int, contains: Boolean): Boolean = {
+      val pt = Wkb.point(points(p)._1, points(p)._2)
+      if (contains) shapes(s).contains(pt) else shapes(s).covers(pt)
+    }
+    val want = Array.tabulate(shapes.size, points.size, 2)((s, p, c) => jts(s, p, c == 1))
+    // keys no earlier use of the table holds, so the threads race to insert
+    val salt = System.nanoTime() << 20
+
+    def onThreads[T](n: Int)(body: Int => T): Seq[T] = {
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val tasks = (0 until n).map { t =>
+        val task = new java.util.concurrent.FutureTask[T](() => { start.await(); body(t) })
+        new Thread(task).start()
+        task
+      }
+      start.countDown()
+      tasks.map(_.get())
+    }
+    // each thread walks the points from its own offset, interleaved with
+    // the other threads' walks over the same testers
+    onThreads(4) { t =>
+      for (k <- points.indices; s <- shapes.indices; c <- 0 to 1) {
+        val p = (k + t * points.size / 4) % points.size
+        val tester = StPredicatePoint.testerByKey(salt + s, wkbs(s))
+        val ans = StPredicatePoint.testPoint(tester, points(p)._1, points(p)._2, c == 1)
+        assert(ans == want(s)(p)(c), s"thread $t shape $s point ${points(p)} contains=${c == 1}")
+      }
+    }
+
+    // overflow: more distinct keys than the bound, inserted from 4 threads
+    val keys = StPredicatePoint.TesterBound + 500
+    onThreads(4) { t =>
+      for (k <- t until keys by 4) {
+        val s = k % shapes.size
+        val tester = StPredicatePoint.testerByKey(salt + shapes.size + k, wkbs(s))
+        assert(StPredicatePoint.testerCount <= StPredicatePoint.TesterBound)
+        val p = (k * 31) % points.size
+        assert(StPredicatePoint.testPoint(tester, points(p)._1, points(p)._2, k % 2 == 1) ==
+          want(s)(p)(k % 2))
+      }
+    }
+    assert(StPredicatePoint.testerCount <= StPredicatePoint.TesterBound)
+    assert(StPredicatePoint.testerCount > 0)
+  }
 }

@@ -28,24 +28,54 @@ class SpatialJoinSpec extends SparkSpec {
     (j, wkt)
   }
 
+  // 1,280 small irregular polygons packed over 60 km x 60 km, so each
+  // task thread of the join meets over a thousand distinct testers in
+  // the refine's shared table. Points include one vertex of every third
+  // polygon, where covers and contains disagree.
+  private lazy val densePolys = (0L until 1280L).map { j =>
+    val cx = 500000.0 + rnd(j, 6) * 60000.0
+    val cy = 200000.0 + rnd(j, 7) * 60000.0
+    val r = 500.0 + rnd(j, 8) * 1500.0
+    val ring = (0 until 7).map { v =>
+      val a = 2 * math.Pi * (v + 0.8 * rnd(j * 7 + v, 9)) / 7
+      val rv = r * (0.5 + 0.5 * rnd(j * 7 + v, 10))
+      s"${cx + rv * math.cos(a)} ${cy + rv * math.sin(a)}"
+    }
+    (j, (ring :+ ring.head).mkString("POLYGON ((", ", ", "))"))
+  }
+  private lazy val densePts = (0L until 6000L).map { i =>
+    (i, 500000.0 + rnd(i, 11) * 60000.0, 200000.0 + rnd(i, 12) * 60000.0)
+  } ++ densePolys.filter(_._1 % 3 == 0).map { case (j, wkt) =>
+    val c = Wkb.readWkt(wkt).getCoordinates.head
+    (100000L + j, c.x, c.y)
+  }
+
   test("cell-indexed point-in-polygon join matches brute-force JTS oracle") {
-    val ptsDf = pts.toDF("pid", "x", "y")
-    val polyDf = tris.toDF("poly_id", "wkt")
-      .withColumn("geometry", st_geomfromtext(col("wkt"))).drop("wkt")
+    val inputs = Seq(
+      ("30 triangles", pts, tris, Seq("covers")),
+      ("1,280 dense polygons", densePts, densePolys, Seq("covers", "contains")))
+    for ((name, points, shapes, predicates) <- inputs; predicate <- predicates) {
+      // 8 partitions: several task threads share the refine's testers
+      val ptsDf = points.toDF("pid", "x", "y").repartition(8)
+      val polyDf = shapes.toDF("poly_id", "wkt")
+        .withColumn("geometry", st_geomfromtext(col("wkt"))).drop("wkt")
 
-    val got = SpatialJoin.pointInPolygon(ptsDf, "x", "y", polyDf, "geometry",
-        resolution = 10000L, broadcastPolys = true, predicate = "covers")
-      .select("pid", "poly_id").as[(Long, Long)].collect().toSet
+      val got = SpatialJoin.pointInPolygon(ptsDf, "x", "y", polyDf, "geometry",
+          resolution = 10000L, broadcastPolys = true, predicate = predicate)
+        .select("pid", "poly_id").as[(Long, Long)].collect().toSet
 
-    val polys = tris.map { case (j, wkt) => j -> Wkb.readWkt(wkt) }
-    val expected = (for {
-      (pid, x, y) <- pts
-      (jid, g) <- polys
-      if g.covers(Wkb.point(x, y))
-    } yield (pid, jid)).toSet
+      val polys = shapes.map { case (j, wkt) => j -> Wkb.readWkt(wkt) }
+      val expected = (for {
+        (pid, x, y) <- points
+        (jid, g) <- polys
+        if g.getEnvelopeInternal.covers(x, y)
+        if (if (predicate == "contains") g.contains(Wkb.point(x, y))
+            else g.covers(Wkb.point(x, y)))
+      } yield (pid, jid)).toSet
 
-    assert(expected.nonEmpty, "oracle produced no pairs — fixture broken")
-    assert(got == expected)
+      assert(expected.nonEmpty, s"$name: oracle produced no pairs — fixture broken")
+      assert(got == expected, s"$name, $predicate")
+    }
   }
 
   test("geomJoin polygons x polygons intersects matches oracle incl. multi-cell dedupe") {
