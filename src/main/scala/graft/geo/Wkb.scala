@@ -31,4 +31,24 @@ object Wkb {
   /** Axis-aligned box polygon (shapely.geometry.box equivalent). */
   def box(minx: Double, miny: Double, maxx: Double, maxy: Double): Geometry =
     factory.toGeometry(new Envelope(minx, maxx, miny, maxy))
+
+  /** `write(box(minx, miny, maxx, maxy))` encoded directly, with no JTS
+    * polygon or writer per call: the 93-byte big-endian WKB polygon
+    * (type 3, one ring of five points in `toGeometry(Envelope)` order).
+    * Any other extent (reversed, zero-width or NaN bounds, which JTS
+    * swaps or turns into a point or a line) still goes through JTS, so
+    * the bytes always match.
+    */
+  def boxWkb(minx: Double, miny: Double, maxx: Double, maxy: Double): Array[Byte] =
+    if (!(minx < maxx && miny < maxy)) write(box(minx, miny, maxx, maxy))
+    else {
+      val b = java.nio.ByteBuffer.allocate(93) // big-endian
+      b.put(0.toByte).putInt(3).putInt(1).putInt(5)
+      def xy(x: Double, y: Double): Unit = {
+        b.putLong(java.lang.Double.doubleToLongBits(x))
+        b.putLong(java.lang.Double.doubleToLongBits(y))
+      }
+      xy(minx, miny); xy(minx, maxy); xy(maxx, maxy); xy(maxx, miny); xy(minx, miny)
+      b.array()
+    }
 }

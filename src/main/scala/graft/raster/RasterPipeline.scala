@@ -127,10 +127,8 @@ object RasterPipeline {
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
         def flush(): Unit = if (curTile != null) {
           specNames.indices.foreach { si =>
-            st.writeRegion(curTile, specNames(si), specDtypes(si), grids(si).data)
-            val nd = specNodata(si)
-            val burnedCells = grids(si).data.count(d =>
-              !(d == nd || (d.isNaN && nd.isNaN))).toLong
+            val burnedCells = st.writeRegion(curTile, specNames(si), specDtypes(si),
+              grids(si).data, specNodata(si))
             out += ((curTile, specNames(si), burnedCells, burnedRows))
           }
         }
@@ -164,7 +162,11 @@ object RasterPipeline {
   /** Raster -> vector: read a TileStore column back as one row per
     * non-nodata cell with its box geometry — the inverse direction of
     * the raster<->vector materialization pair. Tiles parallelize as a
-    * Dataset (one task per tile, no shuffle).
+    * Dataset (one task per tile, no shuffle). Each task decodes only its
+    * region's burned cells ([[TileStore.readCells]]) and writes their
+    * boxes' WKB directly, so the cost follows the burned cells, not the
+    * tile area. A region that does not hold tileCells^2 cells fails the
+    * task with the tile's name.
     */
   def fromTileStore(spark: org.apache.spark.sql.SparkSession, path: String,
       column: String): DataFrame = {
@@ -185,19 +187,15 @@ object RasterPipeline {
       .repartition(math.max(1,
         math.min(tiles.size, spark.sparkContext.defaultParallelism)))
       .flatMap { ref =>
-        val st = new TileStore(path)
-        val data = st.readRegion(ref, column, dtype)
-        val (minx, miny, _, maxy) = graft.index.Bng.bounds(ref)
-        data.iterator.zipWithIndex.collect {
-          case (v, idx) if !(v == nodata || (v.isNaN && nodata.isNaN)) =>
-            val r = idx / tileCells
-            val c = idx % tileCells
+        val cells = new TileStore(path).readCells(ref, column, dtype, nodata,
+          tileCells * tileCells)
+        val (minx, _, _, maxy) = graft.index.Bng.bounds(ref)
+        Samples.cellBoxes(cells, tileCells, 0, minx, maxy, cellSize, cellSize) {
+          (r, c, v, box) =>
             val cellMinX = minx + c * cellSize
             val cellMaxY = maxy - r * cellSize
             (ref, (cellMinX / cellSize).toLong,
-              ((cellMaxY - cellSize) / cellSize).toLong, v,
-              graft.geo.Wkb.write(graft.geo.Wkb.box(
-                cellMinX, cellMaxY - cellSize, cellMinX + cellSize, cellMaxY)))
+              ((cellMaxY - cellSize) / cellSize).toLong, v, box)
         }
       }
       .toDF("tile", "cell_e", "cell_n", "value", "geometry")
@@ -305,9 +303,7 @@ object RasterPipeline {
             i += 1
           }
         }
-        new TileStore(path).writeRegion(tile, valueCol, dtype, data)
-        val burned = data.count(d => !(d == nodata || (d.isNaN && nodata.isNaN))).toLong
-        (tile, valueCol, burned)
+        (tile, valueCol, new TileStore(path).writeRegion(tile, valueCol, dtype, data, nodata))
       }
       .toDF("tile", "column", "burned_cells")
     metrics.localCheckpoint(true)
@@ -377,9 +373,7 @@ object RasterPipeline {
             i += 1
           }
         }
-        new TileStore(path).writeRegion(tile, valueCol, dtype, data)
-        val burned = data.count(d => !(d == nodata || (d.isNaN && nodata.isNaN))).toLong
-        (tile, valueCol, burned)
+        (tile, valueCol, new TileStore(path).writeRegion(tile, valueCol, dtype, data, nodata))
       }
       .toDF("tile", "column", "burned_cells")
     metrics.localCheckpoint(true)

@@ -143,38 +143,23 @@ object Tiff {
     out
   }
 
-  /** Decode one strip's raw (possibly compressed) bytes to sample
-    * values, row-major within the strip.
+  /** One strip's raw (possibly compressed) bytes as its samples,
+    * row-major within the strip, in the file's byte order.
     */
-  private[raster] def decodeStrip(raw: Array[Byte], inf: Info,
-      stripRows: Int): Array[Double] = {
-    val bytesPer = inf.bits / 8
-    val expected = stripRows * inf.width * bytesPer
+  private def stripSamples(raw: Array[Byte], inf: Info, stripRows: Int): ByteBuffer = {
+    require(Decodable.contains(inf.dtype),
+      s"sample format ${inf.sampleFormat}/${inf.bits}")
+    val expected = stripRows * inf.width * (inf.bits / 8)
     val data =
       if (inf.compression == 1) raw
       else inflate(raw, expected)
     require(data.length >= expected, "short strip")
-    val order = if (inf.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN
-    val b = ByteBuffer.wrap(data).order(order)
-    val out = new Array[Double](stripRows * inf.width)
-    var i = 0
-    while (i < out.length) {
-      out(i) = (inf.sampleFormat, inf.bits) match {
-        case (3, 32) => b.getFloat(i * 4).toDouble
-        case (3, 64) => b.getDouble(i * 8)
-        case (2, 8) => data(i).toDouble
-        case (2, 16) => b.getShort(i * 2).toDouble
-        case (2, 32) => b.getInt(i * 4).toDouble
-        case (_, 8) => (data(i) & 0xff).toDouble
-        case (_, 16) => (b.getShort(i * 2) & 0xffff).toDouble
-        case (_, 32) => (b.getInt(i * 4) & 0xffffffffL).toDouble
-        case (sf, bits) =>
-          throw new IllegalArgumentException(s"sample format $sf/$bits")
-      }
-      i += 1
-    }
-    out
+    ByteBuffer.wrap(data)
+      .order(if (inf.littleEndian) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
   }
+
+  private val Decodable =
+    Set("uint8", "int8", "uint16", "int16", "uint32", "int32", "float32", "float64")
 
   /** Full driver-side decode (specs + tiny goldens): row-major pixels. */
   def readPixels(path: String): (Info, Array[Double]) = {
@@ -186,8 +171,8 @@ object Tiff {
       val raw = java.util.Arrays.copyOfRange(bytes,
         inf.stripOffsets(s).toInt,
         (inf.stripOffsets(s) + inf.stripCounts(s)).toInt)
-      System.arraycopy(decodeStrip(raw, inf, rows), 0, out,
-        s * inf.rowsPerStrip * inf.width, rows * inf.width)
+      System.arraycopy(Samples.decode(stripSamples(raw, inf, rows), inf.dtype, rows * inf.width),
+        0, out, s * inf.rowsPerStrip * inf.width, rows * inf.width)
     }
     (inf, out)
   }
@@ -210,18 +195,10 @@ object Tiff {
         val raw = new Array[Byte](inf.stripCounts(s).toInt)
         try { raf.seek(inf.stripOffsets(s)); raf.readFully(raw) }
         finally raf.close()
-        val vals = decodeStrip(raw, inf, rows)
-        val baseRow = s * inf.rowsPerStrip
-        vals.iterator.zipWithIndex.collect {
-          case (v, idx) if !(v == nodata || (v.isNaN && nodata.isNaN)) =>
-            val r = baseRow + idx / inf.width
-            val c = idx % inf.width
-            val minx = inf.originX + c * inf.cellSizeX
-            val maxy = inf.originY - r * inf.cellSizeY
-            (r.toLong, c.toLong, v,
-              graft.geo.Wkb.write(graft.geo.Wkb.box(
-                minx, maxy - inf.cellSizeY, minx + inf.cellSizeX, maxy)))
-        }
+        val cells = Samples.nonNodata(stripSamples(raw, inf, rows), inf.dtype,
+          rows * inf.width, nodata)
+        Samples.cellBoxes(cells, inf.width, s * inf.rowsPerStrip, inf.originX, inf.originY,
+          inf.cellSizeX, inf.cellSizeY)((r, c, v, box) => (r.toLong, c.toLong, v, box))
       }
       .toDF("row", "col", "value", "geometry")
   }

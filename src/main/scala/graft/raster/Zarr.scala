@@ -36,26 +36,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Zarr {
 
-  /** TileStore dtype ladder -> zarr v2 dtype string (little-endian;
-    * single-byte types use '|' per the spec).
+  /** zarr v2 dtype string (little-endian; single-byte types use '|' per
+    * the spec) -> TileStore dtype. Its keys are the only dtypes
+    * decode()/encode() implement.
     */
-  def zarrDtype(dtype: String): String = dtype match {
-    case "uint8" => "|u1"
-    case "int8" => "|i1"
-    case "uint16" => "<u2"
-    case "int16" => "<i2"
-    case "uint32" => "<u4"
-    case "int32" => "<i4"
-    case "uint64" => "<u8"
-    case "int64" => "<i8"
-    case "float32" => "<f4"
-    case _ => "<f8"
-  }
+  private val StoreDtype: Map[String, String] = Map(
+    "|u1" -> "uint8", "|i1" -> "int8", "<u2" -> "uint16", "<i2" -> "int16",
+    "<u4" -> "uint32", "<i4" -> "int32", "<u8" -> "uint64", "<i8" -> "int64",
+    "<f4" -> "float32", "<f8" -> "float64")
 
-  private def bytesPer(zdt: String): Int = zdt.substring(2).toInt
+  /** TileStore dtype ladder -> zarr v2 dtype string. */
+  def zarrDtype(dtype: String): String =
+    StoreDtype.collectFirst { case (z, d) if d == dtype => z }.getOrElse("<f8")
 
   /** Encode a region's doubles as the zarr chunk payload (C order,
-    * little-endian) — the same per-dtype narrowing TileStore regions use,
+    * little-endian) with the codec TileStore regions use ([[Samples]]),
     * so store bytes and zarr bytes carry identical values.
     *
     * uint64 caveat (round-6 verdict #4): `<u8` saturates at
@@ -64,38 +59,13 @@ object Zarr {
     * would therefore differ from numpy's 2^64-1; keep uint64 out of
     * export paths (the dtype ladder never emits it for real data).
     */
-  private[graft] def encode(zdt: String, data: Array[Double]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(data.length * bytesPer(zdt))
-      .order(ByteOrder.LITTLE_ENDIAN)
-    zdt match {
-      case "|u1" | "|i1" => data.foreach(v => bb.put(v.toByte))
-      case "<u2" | "<i2" => data.foreach(v => bb.putShort(v.toInt.toShort))
-      case "<u4" | "<i4" => data.foreach(v => bb.putInt(v.toLong.toInt))
-      case "<u8" | "<i8" => data.foreach(v => bb.putLong(
-        if (v.isNaN) 0L else if (v >= Long.MaxValue.toDouble) Long.MaxValue else v.toLong))
-      case "<f4" => data.foreach(v => bb.putFloat(v.toFloat))
-      case _ => data.foreach(bb.putDouble)
-    }
-    bb.array()
-  }
+  private[graft] def encode(zdt: String, data: Array[Double]): Array[Byte] =
+    Samples.encode(data, StoreDtype(zdt), Double.NaN)._1
 
   private[graft] def decode(zdt: String, bytes: Array[Byte]): Array[Double] = {
-    val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    val n = bytes.length / bytesPer(zdt)
-    val out = new Array[Double](n)
-    var i = 0
-    zdt match {
-      case "|u1" => while (i < n) { out(i) = bb.get() & 0xff; i += 1 }
-      case "|i1" => while (i < n) { out(i) = bb.get().toDouble; i += 1 }
-      case "<u2" => while (i < n) { out(i) = bb.getShort() & 0xffff; i += 1 }
-      case "<i2" => while (i < n) { out(i) = bb.getShort().toDouble; i += 1 }
-      case "<u4" => while (i < n) { out(i) = bb.getInt().toLong & 0xffffffffL; i += 1 }
-      case "<i4" => while (i < n) { out(i) = bb.getInt().toDouble; i += 1 }
-      case "<u8" | "<i8" => while (i < n) { out(i) = bb.getLong().toDouble; i += 1 }
-      case "<f4" => while (i < n) { out(i) = bb.getFloat().toDouble; i += 1 }
-      case _ => while (i < n) { out(i) = bb.getDouble(); i += 1 }
-    }
-    out
+    val dtype = StoreDtype(zdt)
+    Samples.decode(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN), dtype,
+      bytes.length / Samples.bytesPer(dtype))
   }
 
   /** numcodecs `zlib` codec: a standard RFC 1950 zlib stream (what
@@ -323,8 +293,7 @@ object Zarr {
   }
 
   /** The dtype strings decode()/encode() actually implement. */
-  val SupportedDtypes: Set[String] = Set(
-    "|u1", "|i1", "<u2", "<i2", "<u4", "<i4", "<u8", "<i8", "<f4", "<f8")
+  val SupportedDtypes: Set[String] = StoreDtype.keySet
 
   /** Read one chunk back as doubles (fill-valued if the chunk file is
     * absent — zarr semantics for never-written chunks). 1-D arrays (the

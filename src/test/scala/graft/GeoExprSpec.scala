@@ -156,4 +156,25 @@ class GeoExprSpec extends SparkSpec {
     assert(StPredicatePoint.testerCount <= StPredicatePoint.TesterBound)
     assert(StPredicatePoint.testerCount > 0)
   }
+
+  test("direct cell-box WKB is byte-identical to JTS write(box) (property)") {
+    val coord = Gen.oneOf(
+      Gen.choose(0L, 700000L).map(_.toDouble), // integer BNG metres
+      Gen.choose(0.0, 1300000.0), // fractional
+      Gen.choose(-1e6, 1e6))
+    val size = Gen.oneOf(Gen.const(10.0), Gen.const(0.0), Gen.choose(-50.0, 5000.0),
+      Gen.const(Double.NaN))
+    val gen = for {
+      x <- coord; y <- coord; w <- size; h <- size
+    } yield (x, y, w, h)
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(5000),
+      Prop.forAll(gen) { case (x, y, w, h) =>
+        // NaN bounds make JTS throw; both paths must then fail alike
+        def bytes(f: => Array[Byte]) = scala.util.Try(f).toOption.map(_.toSeq)
+        val direct = bytes(Wkb.boxWkb(x, y, x + w, y + h))
+        direct == bytes(Wkb.write(Wkb.box(x, y, x + w, y + h))) &&
+          (!(x + w > x && y + h > y) || direct.exists(_.length == 93))
+      })
+    assert(res.passed, res.status.toString)
+  }
 }

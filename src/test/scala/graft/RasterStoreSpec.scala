@@ -5,6 +5,8 @@ import graft.geo.Wkb
 import graft.raster.{RasterPipeline, Resample, TileStore}
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** The reference's to_zarr dtype/chequerboard matrix (FIXTURES.md §3,
   * tests/fixtures/dataframe/to_zarr.py) + the 6-case resample matrix
   * (§5), re-expressed over the TileStore.
@@ -136,11 +138,114 @@ class RasterStoreSpec extends SparkSpec {
       new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED))
     out.write(Array[Byte](7, 0, 42)); out.close()
     assert(st.readRegion("SE", "old", "uint8").toSeq == Seq(7d, 0d, 42d))
+    // a streamed Zstd frame (no content size), as every store written
+    // before one-shot compression holds
+    val zs = new com.github.luben.zstd.ZstdOutputStream(
+      java.nio.file.Files.newOutputStream(dir.resolve("streamed.bin")), 1)
+    zs.write(Array[Byte](3, 0, 0, 0, 5, 0, 0, 0)); zs.close()
+    assert(st.readRegion("SE", "streamed", "int32").toSeq == Seq(3d, 5d))
+    val sparse = st.readCells("SE", "streamed", "int32", 5d, cells = 2)
+    assert(sparse.index.toSeq == Seq(0) && sparse.value.toSeq == Seq(3d))
     // new writes are zstd frames
     st.writeRegion("SE", "nu", "uint8", Array(9d))
     val head = java.nio.file.Files.readAllBytes(dir.resolve("nu.bin")).take(4)
     assert(head.toSeq == Seq(0x28.toByte, 0xB5.toByte, 0x2F.toByte, 0xFD.toByte))
     assert(st.readRegion("SE", "nu", "uint8").toSeq == Seq(9d))
+  }
+
+  /** A store of 10 x 10-cell tiles (10 km cells on 100 km tiles) with one
+    * column per dtype: values in the first and last row and column of
+    * "SE", random cells in "NT" and "TQ" all nodata.
+    */
+  private val readbackDtypes = Seq(
+    ("uint8", 255d, Seq(0d, 1d, 254d)),
+    ("int16", 32767d, Seq(-32768d, -1d, 32766d)),
+    ("uint16", 65535d, Seq(0d, 1d, 65534d)),
+    ("int32", 2147483647d, Seq(-2147483648d, 0d, 2147483646d)),
+    ("uint32", 4294967295d, Seq(0d, 7d, 4294967294d)),
+    ("float32", Double.NaN, Seq(-0.25, 0d, 1.5, 3.0e38)),
+    ("float64", Double.NaN, Seq(-1e300, 0.1, 2.5e-310)))
+
+  private def readbackStore(): String = {
+    val path = java.nio.file.Files.createTempDirectory("tilestore-readback").toString
+    val st = new TileStore(path)
+    st.init(graft.raster.StoreHeader("EPSG:27700", 10000, 0, 0, 700000, 1300000, 100000,
+      readbackDtypes.map { case (dt, nd, _) => graft.raster.ColumnSpec(s"c_$dt", dt, nd) },
+      Map.empty), overwrite = true)
+    val rnd = new scala.util.Random(7)
+    readbackDtypes.foreach { case (dt, nd, vals) =>
+      val edges = Array.fill(100)(nd)
+      Seq(0, 9, 90, 99, 5, 40, 49, 95).zipWithIndex.foreach { case (i, k) =>
+        edges(i) = vals(k % vals.length)
+      }
+      val random = Array.fill(100)(
+        if (rnd.nextDouble() < 0.3) vals(rnd.nextInt(vals.length)) else nd)
+      Seq("SE" -> edges, "NT" -> random, "TQ" -> Array.fill(100)(nd)).foreach {
+        case (tile, data) =>
+          val burned = st.writeRegion(tile, s"c_$dt", dt, data, nd)
+          assert(burned == data.count(v => !(v == nd || (v.isNaN && nd.isNaN))), s"$dt $tile")
+      }
+    }
+    path
+  }
+
+  test("fromTileStore emits exactly the non-nodata cells of every dtype, WKB included") {
+    val path = readbackStore()
+    val st = new TileStore(path)
+    readbackDtypes.foreach { case (dt, nd, _) =>
+      val column = s"c_$dt"
+      // brute force over the full grids, boxes through JTS
+      val expected = for {
+        tile <- st.tiles()
+        data = st.readRegion(tile, column, dt)
+        (minx, _, _, maxy) = graft.index.Bng.bounds(tile)
+        idx <- data.indices
+        v = data(idx)
+        if !(v == nd || (v.isNaN && nd.isNaN))
+      } yield {
+        val cellMinX = minx + (idx % 10) * 10000.0
+        val cellMaxY = maxy - (idx / 10) * 10000.0
+        (tile, (cellMinX / 10000).toLong, ((cellMaxY - 10000) / 10000).toLong, v,
+          Wkb.write(Wkb.box(cellMinX, cellMaxY - 10000, cellMinX + 10000, cellMaxY)).toSeq)
+      }
+      val got = RasterPipeline.fromTileStore(spark, path, column).collect().map { r =>
+        (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+          r.getAs[Array[Byte]](4).toSeq)
+      }.toSeq
+      def key(t: (String, Long, Long, Double, Seq[Byte])) = (t._1, t._2, t._3)
+      assert(got.sortBy(key) == expected.sortBy(key), dt)
+      assert(expected.count(_._1 == "SE") == 8 && !expected.exists(_._1 == "TQ"), dt)
+      // SE's corner cells: first and last row and column of the tile
+      val se = expected.filter(_._1 == "SE").map(t => (t._2, t._3)).toSet
+      val (sx, sy, _, _) = graft.index.Bng.bounds("SE")
+      val (e0, n0) = ((sx / 10000).toLong, (sy / 10000).toLong)
+      assert(Seq((e0, n0), (e0 + 9, n0), (e0, n0 + 9), (e0 + 9, n0 + 9)).forall(se.contains), dt)
+    }
+  }
+
+  test("fromTileStore fails naming the tile when a region is short") {
+    val path = readbackStore()
+    new TileStore(path).writeRegion("NT", "c_int16", "int16", Array.fill(99)(1d))
+    val e = intercept[Exception] {
+      RasterPipeline.fromTileStore(spark, path, "c_int16").collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains("tile NT") && m.contains("expected 200")),
+      messages.mkString(" | "))
+  }
+
+  test("a failed region write leaves no temp file behind") {
+    val path = java.nio.file.Files.createTempDirectory("tilestore-tmp").toString
+    val st = new TileStore(path)
+    // a non-empty directory where the region file should land makes the
+    // final move fail
+    val blocker = java.nio.file.Paths.get(path, "tile=SE", "v.bin", "x")
+    java.nio.file.Files.createDirectories(blocker)
+    intercept[java.io.IOException](st.writeRegion("SE", "v", "uint8", Array(1d)))
+    val left = java.nio.file.Files.list(java.nio.file.Paths.get(path, "tile=SE"))
+    try assert(left.iterator().asScala.map(_.getFileName.toString).toSeq == Seq("v.bin"))
+    finally left.close()
   }
 
   test("overwrite guard (reference _warn_zarr_overwrite)") {
@@ -161,7 +266,7 @@ class RasterStoreSpec extends SparkSpec {
     val data = Array(0d, 1d, 254d, 100d)
     Seq("uint8", "int16", "uint16", "int32", "uint32", "int64", "float32", "float64")
       .foreach { dt =>
-        st.writeRegion("SE", s"c_$dt", dt, data)
+        assert(st.writeRegion("SE", s"c_$dt", dt, data, nodata = 254d) == 3, dt)
         assert(st.readRegion("SE", s"c_$dt", dt).toSeq == data.toSeq, dt)
       }
     // unsigned semantics: 65535 survives uint16
