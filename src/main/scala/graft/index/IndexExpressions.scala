@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.locationtech.jts.geom.{Envelope, Geometry, Polygonal}
 
 /** Batched Catalyst cell encoders — the graft's replacement for the
   * reference's per-row Python UDF `calculate_bng_index`
@@ -294,6 +295,15 @@ case class SphericalCellId(left: Expression, right: Expression, res: Int,
   *  - "contains": cells wholly contained in the geometry (documented
   *    deviation: the reference's 'contains' returns intersecting cells +
   *    a containment FLAG — that shape is [[BngIndexFlagsExpr]]).
+  *
+  * Single-cell fast path: under "intersects" and "interior", a
+  * positive-area Polygonal geometry whose envelope lies in the half-open
+  * cell `[x0, x1) x [y0, y1)` of its only candidate gets that cell with
+  * no prepare and no relate. This is exact: the geometry lies in its
+  * envelope, so its (non-empty) interior lies in the envelope's interior,
+  * which lies in the open cell. The interiors meet, so the geometry
+  * intersects the cell and does not merely touch it. Zero-area, linear,
+  * point-like and multi-candidate geometries keep the JTS refine.
   */
 case class BngIndexExpr(child: Expression, resolution: Long, how: String)
     extends UnaryExpression with CodegenFallback {
@@ -314,6 +324,8 @@ case class BngIndexExpr(child: Expression, resolution: Long, how: String)
       (env.getWidth == 0 && env.getHeight == 0)
     val refs: Seq[String] =
       if (how == "bounding box" || (isPointLike && how != "contains")) candidates
+      else if (how != "contains" && candidates.lengthCompare(1) == 0 &&
+          insideCell(g, env, candidates.head)) candidates
       else {
         // Refine with real geometry tests; prepare once per row (rows with
         // large envelopes amortize over many candidate cells).
@@ -330,6 +342,15 @@ case class BngIndexExpr(child: Expression, resolution: Long, how: String)
       }
     refs
   }
+
+  /** `g` is Polygonal with positive area and `env` lies in the half-open
+    * cell `ref` (the fast path's condition, see the class doc).
+    */
+  private def insideCell(g: Geometry, env: Envelope, ref: String): Boolean =
+    g.isInstanceOf[Polygonal] && {
+      val (minx, miny, maxx, maxy) = Bng.bounds(ref)
+      env.getMinX >= minx && env.getMaxX < maxx && env.getMinY >= miny && env.getMaxY < maxy
+    } && g.getArea > 0
 
   override protected def nullSafeEval(v: Any): Any =
     new GenericArrayData(refsOf(v).map(UTF8String.fromString).toArray[Any])

@@ -29,7 +29,20 @@ object RasterPipeline {
     * @param lookups     categorize lookups to stamp into attrs
     * @param cellSize    raster cell size (reference: 10 m)
     * @param tileSize    tile edge (reference: 100 km; north rule: 10 km)
-    * @return metrics DataFrame (tile, column, burned, rows)
+    * @return metrics DataFrame (tile, column, burned_cells, n_rows),
+    *         collected: no persisted RDD is left behind
+    *
+    * The write follows the burned cells. Tile assignment is
+    * `bng_index(.., "interior")`, which settles a polygon lying in one
+    * tile without a JTS relate. Each burn task keeps one dtype-width
+    * little-endian buffer per column ([[RegionBytes]]); per tile it
+    * fills it with nodata, writes each row's [[Rasterize.spans]]
+    * straight into the buffers (null values are coalesced to nodata, so
+    * a null row overwrites with nodata) and hands the bytes to the
+    * region write. burned_cells is counted as cells are written, exact
+    * under overwrites. Stored bytes equal [[TileStore.writeRegion]] of
+    * the [[Rasterize.burnGeometry]] grid (a NaN value under a NaN
+    * sentinel is stored as the sentinel's NaN).
     */
   def toTileStore(
       df: DataFrame, geometryCol: String, columns: Seq[String],
@@ -121,15 +134,20 @@ object RasterPipeline {
       .as[(String, Array[Byte], Seq[Double])]
       .mapPartitions { rows =>
         val st = new TileStore(storePath)
+        // one dtype-width region buffer per column, reused for every tile
+        // of the task; each row's spans land in all of them
+        lazy val regions = specDtypes.indices.map(si =>
+          new RegionBytes(specDtypes(si), specNodata(si), tileCells * tileCells)).toArray
+        val bits = new Array[Long](specDtypes.length)
+        val spans = new Spans
         var curTile: String = null
-        var grids: Seq[TileGrid] = null
+        var frame: TileFrame = null
         var burnedRows = 0L
         val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
         def flush(): Unit = if (curTile != null) {
           specNames.indices.foreach { si =>
-            val burnedCells = st.writeRegion(curTile, specNames(si), specDtypes(si),
-              grids(si).data, specNodata(si))
-            out += ((curTile, specNames(si), burnedCells, burnedRows))
+            st.writeRegionBytes(curTile, specNames(si), regions(si).bytes)
+            out += ((curTile, specNames(si), regions(si).burnedCells, burnedRows))
           }
         }
         rows.foreach { case (tileRef, geomBytes, vals) =>
@@ -138,14 +156,22 @@ object RasterPipeline {
             curTile = tileRef
             burnedRows = 0L
             val (minx, miny, _, _) = graft.index.Bng.bounds(tileRef)
-            grids = specNodata.map(nd =>
-              Rasterize.empty(minx, miny, cellSize, tileCells, fill = nd))
+            frame = TileFrame(minx, miny, cellSize, tileCells)
+            regions.foreach(_.reset())
           }
-          val geom = graft.geo.Wkb.read(geomBytes)
           var si = 0
-          while (si < grids.length) {
-            Rasterize.burnGeometry(grids(si), geom, vals(si))
-            si += 1
+          while (si < bits.length) {
+            bits(si) = regions(si).bitsOf(vals(si)); si += 1
+          }
+          Rasterize.spans(frame, graft.geo.Wkb.read(geomBytes), spans)
+          var k = 0
+          while (k < spans.size) {
+            val row = spans.row(k) * tileCells
+            si = 0
+            while (si < bits.length) {
+              regions(si).fill(row + spans.c0(k), row + spans.c1(k), bits(si)); si += 1
+            }
+            k += 1
           }
           burnedRows += 1
         }
@@ -154,10 +180,17 @@ object RasterPipeline {
       }
       .toDF("tile", "column", "burned_cells", "n_rows")
     // Sinks execute eagerly (the reference forces the grouped-map with a
-    // noop sink, dataframe.py:540-543). localCheckpoint also cuts lineage
-    // so downstream reuse never re-runs the side-effecting writes.
-    metrics.localCheckpoint(true)
+    // noop sink, dataframe.py:540-543); the collected frame also keeps
+    // downstream reuse from re-running the side-effecting writes.
+    collected(metrics)
   }
+
+  /** `df` run once and returned as a local frame of its rows (same
+    * column names and types): the writers' small metrics frames, with no
+    * persisted or checkpointed RDD left behind.
+    */
+  private def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Raster -> vector: read a TileStore column back as one row per
     * non-nodata cell with its box geometry — the inverse direction of
@@ -306,7 +339,7 @@ object RasterPipeline {
         (tile, valueCol, new TileStore(path).writeRegion(tile, valueCol, dtype, data, nodata))
       }
       .toDF("tile", "column", "burned_cells")
-    metrics.localCheckpoint(true)
+    collected(metrics)
   }
 
   def toTileStoreSaltedPoints(
@@ -376,7 +409,7 @@ object RasterPipeline {
         (tile, valueCol, new TileStore(path).writeRegion(tile, valueCol, dtype, data, nodata))
       }
       .toDF("tile", "column", "burned_cells")
-    metrics.localCheckpoint(true)
+    collected(metrics)
   }
 
   /** Reference `_dataframe.py:444-448`: lookup attr gets a nodata entry. */

@@ -102,6 +102,16 @@ class TileStore(val path: String) {
   def writeRegion(tileRef: String, column: String, dtype: String,
       data: Array[Double], nodata: Double = Double.NaN): Long = {
     val (raw, burned) = Samples.encode(data, dtype, nodata)
+    writeRegionBytes(tileRef, column, raw)
+    burned
+  }
+
+  /** [[writeRegion]] of a region already in its stored little-endian
+    * layout (`raw` is not kept), the burn path's write: one-shot Zstd,
+    * a temp file, an atomic move.
+    */
+  private[raster] def writeRegionBytes(tileRef: String, column: String,
+      raw: Array[Byte]): Unit = {
     val frame = com.github.luben.zstd.Zstd.compress(raw, 1)
     val dir = Paths.get(path, s"tile=$tileRef")
     Files.createDirectories(dir)
@@ -115,7 +125,6 @@ class TileStore(val path: String) {
         Files.deleteIfExists(tmp)
         throw e
     }
-    burned
   }
 
   /** One region's decompressed little-endian bytes. */

@@ -1,7 +1,13 @@
 package graft
 
 import graft.core.Constants
-import graft.index.Bng
+import graft.geo.Wkb
+import graft.index.{Bng, BngIndexExpr, BngIndexIdsExpr}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.locationtech.jts.geom.{Coordinate, Geometry, Polygon}
+import org.locationtech.jts.geom.prep.PreparedGeometryFactory
+import org.locationtech.jts.geom.util.AffineTransformation
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,5 +72,94 @@ class BngSpec extends AnyFunSuite {
     val id3 = Bng.cellId(440001, 432342, 10000)
     assert(id1 == id2)
     assert(id1 != id3)
+  }
+
+  /** `bng_index` / `bng_index_ids` refs of `g` as the expression emits them. */
+  private def refs(g: Geometry, res: Long, how: String): Seq[String] =
+    BngIndexExpr(Literal(Wkb.write(g)), res, how).eval().asInstanceOf[GenericArrayData]
+      .array.toSeq.map(_.toString)
+
+  /** The JTS refine alone, with no single-cell fast path. */
+  private def jtsRefs(g: Geometry, res: Long, how: String): Seq[String] = {
+    val env = g.getEnvelopeInternal
+    val pg = PreparedGeometryFactory.prepare(g)
+    Bng.envelopeCells(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, res).filter { ref =>
+      val (minx, miny, maxx, maxy) = Bng.bounds(ref)
+      val cell = Wkb.box(minx, miny, maxx, maxy)
+      if (how == "interior") pg.intersects(cell) && !pg.touches(cell) else pg.intersects(cell)
+    }
+  }
+
+  test("single-cell fast path returns the JTS refine's refs (intersects, interior)") {
+    val f = Wkb.factory
+    val rnd = new scala.util.Random(2024)
+    def ring(cs: (Double, Double)*) =
+      f.createPolygon((cs :+ cs.head).map { case (x, y) => new Coordinate(x, y) }.toArray)
+    /** Star-shaped simple polygon, sometimes shifted so that its envelope
+      * starts or ends exactly on a grid line of `res`.
+      */
+    def seeded(res: Long): Geometry = {
+      val (cx, cy) = (300000 + 400000 * rnd.nextDouble(), 300000 + 400000 * rnd.nextDouble())
+      val r = res * math.pow(10, -2 + 2.3 * rnd.nextDouble())
+      val n = 3 + rnd.nextInt(10)
+      val p = ring((0 until n).map { v =>
+        val a = 2 * math.Pi * (v + 0.8 * rnd.nextDouble()) / n
+        val rv = r * (0.5 + 0.5 * rnd.nextDouble())
+        (cx + rv * math.cos(a), cy + rv * math.sin(a))
+      }: _*)
+      val env = p.getEnvelopeInternal
+      val shift = rnd.nextInt(5) match {
+        case 0 => Some((math.ceil(env.getMinX / res) * res - env.getMinX,
+          math.ceil(env.getMinY / res) * res - env.getMinY)) // min edges on grid lines
+        case 1 => Some((math.floor(env.getMaxX / res) * res - env.getMaxX, 0d)) // max edge on one
+        case _ => None
+      }
+      val g = shift.fold(p: Geometry) { case (dx, dy) =>
+        AffineTransformation.translationInstance(dx, dy).transform(p)
+      }
+      // a valid MultiPolygon: the copy's x-range starts past the star's
+      if (rnd.nextInt(10) == 0) f.createMultiPolygon(Array(g.asInstanceOf[Polygon],
+        AffineTransformation.translationInstance(2.5 * r, 0).transform(g).asInstanceOf[Polygon]))
+      else g
+    }
+    def pt(x: Double, y: Double) = new Coordinate(x, y)
+    val hand: Seq[Geometry] = Seq(
+      // touching its cell's min edges from inside
+      Wkb.box(530000, 180000, 530500, 180500), ring((530000, 180000), (531000, 180200), (530300, 181000)),
+      // max edge exactly on a grid line
+      Wkb.box(539500, 181000, 540000, 182000), Wkb.box(531000, 189000, 532000, 190000),
+      // zero-area slivers (the second a spike along its cell's min edge,
+      // which JTS finds touching), symmetric and lopsided bowties
+      ring((531000, 181000), (532000, 181000), (533000, 181000)),
+      ring((530000, 180000), (531000, 180000), (530000, 180000)),
+      ring((531000, 181000), (533000, 183000), (533000, 181000), (531000, 183000)),
+      ring((531000, 181000), (535000, 185000), (535000, 181000), (531000, 182000)),
+      // straddling the canvas's west edge: one clamped candidate
+      Wkb.box(-5000, 181000, 5000, 182000),
+      // a line on a grid line
+      f.createLineString(Array(pt(540000, 181000), pt(540000, 188000))))
+    val lineOnGrid = hand.last
+    assert(refs(lineOnGrid, 10000, "interior").isEmpty)
+    assert(refs(lineOnGrid, 10000, "intersects") == Seq("TQ48")) // half-open candidates
+    var single = 0
+    val cases = hand.map(g => (g, 10000L)) ++ (0 until 5000).map { i =>
+      val res = if (i % 2 == 0) 10000L else 1000L
+      (seeded(res), res)
+    }
+    cases.foreach { case (g, res) =>
+      val env = g.getEnvelopeInternal
+      if (Bng.envelopeCells(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, res).size == 1)
+        single += 1
+      Seq("intersects", "interior").foreach { how =>
+        assert(refs(g, res, how) == jtsRefs(g, res, how), s"$how at $res: $g")
+        val ids = BngIndexIdsExpr(Literal(Wkb.write(g)), res, how).eval()
+          .asInstanceOf[GenericArrayData].toLongArray().toSeq
+        assert(ids == refs(g, res, how).map { ref =>
+          val (e, n, r) = Bng.parse(ref)
+          Bng.cellId(e.toDouble, n.toDouble, r)
+        }, s"ids, $how at $res")
+      }
+    }
+    assert(single > 1000, s"only $single single-candidate cases")
   }
 }

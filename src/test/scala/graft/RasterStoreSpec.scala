@@ -4,6 +4,7 @@ import graft.core.Constants
 import graft.geo.Wkb
 import graft.raster.{RasterPipeline, Resample, TileStore}
 import org.apache.spark.sql.functions._
+import org.locationtech.jts.geom.{Coordinate, Geometry, Polygon}
 
 import scala.jdk.CollectionConverters._
 
@@ -298,6 +299,110 @@ class RasterStoreSpec extends SparkSpec {
       for (dr <- 0 until 2; dc <- 0 until 2)
         assert(canvas(r * 2 + dr)(c * 2 + dc) == expected, s"($r,$c)")
     }
+  }
+
+  /** Star-shaped simple polygon around (cx, cy): increasing vertex
+    * angles, radii in [0.5 r, r].
+    */
+  private def star(rnd: scala.util.Random, cx: Double, cy: Double, r: Double): Geometry = {
+    val n = 5 + rnd.nextInt(8)
+    val cs = (0 until n).map { v =>
+      val a = 2 * math.Pi * (v + 0.8 * rnd.nextDouble()) / n
+      val rv = r * (0.5 + 0.5 * rnd.nextDouble())
+      new Coordinate(cx + rv * math.cos(a), cy + rv * math.sin(a))
+    }
+    Wkb.factory.createPolygon((cs :+ cs.head).toArray)
+  }
+
+  test("toTileStore regions and burned_cells equal a grid burn + encode, every dtype") {
+    // 100 x 100-cell tiles (100 m cells on 10 km tiles) around TQ38/TQ49
+    val rnd = new scala.util.Random(11)
+    val f = Wkb.factory
+    def pt(x: Double, y: Double) = new Coordinate(x, y)
+    val hand: Seq[Geometry] = Seq(
+      // a box over all of TQ38 and a little beyond: spans in its first
+      // and last row and column, and the edges of its neighbours
+      Wkb.box(529950, 179950, 540050, 190050),
+      // shell with a hole
+      Wkb.readWkt("POLYGON ((531000 181000, 538000 181000, 538000 188000, 531000 188000, " +
+        "531000 181000), (533000 183000, 536000 183000, 536000 186000, 533000 186000, " +
+        "533000 183000))"),
+      f.createMultiPolygon(Array(
+        Wkb.box(541000, 181000, 543000, 183000).asInstanceOf[Polygon],
+        Wkb.box(545000, 185000, 548000, 199000).asInstanceOf[Polygon])),
+      f.createLineString(Array(pt(530050, 180050), pt(549950, 199950), pt(549950, 180050))),
+      Wkb.point(530000, 180000), Wkb.point(539999.5, 189999.5), Wkb.point(545050, 195050),
+      f.createGeometryCollection(Array(Wkb.point(532050, 198050),
+        f.createLineString(Array(pt(531000, 195000), pt(538000, 192000))),
+        Wkb.box(542000, 192000, 546000, 196000))),
+      // a line along the TQ38/TQ48 grid line: no interior cell in either
+      f.createLineString(Array(pt(540000, 181000), pt(540000, 188000))))
+    val random = (0 until 60).map { _ =>
+      val (cx, cy) = (530000 + 20000 * rnd.nextDouble(), 180000 + 20000 * rnd.nextDouble())
+      if (rnd.nextBoolean()) star(rnd, cx, cy, 200 + 3000 * rnd.nextDouble())
+      else Wkb.box(cx, cy, cx + 100 + 4000 * rnd.nextDouble(), cy + 100 + 4000 * rnd.nextDouble())
+    }
+    val geoms = rnd.shuffle(hand ++ random) ++ hand.take(2) // the last rows overwrite
+    def int(lo: Long, hi: Long): Option[Long] =
+      if (rnd.nextDouble() < 0.15) None else Some(lo + (rnd.nextDouble() * (hi - lo)).toLong)
+    def real(lo: Double, hi: Double): Option[Double] =
+      if (rnd.nextDouble() < 0.15) None else Some(lo + math.floor(rnd.nextDouble() * 64) * (hi - lo) / 64)
+    val rows = geoms.zipWithIndex.map { case (g, i) =>
+      (Wkb.write(g), int(0, 200), int(-300, 300),
+        if (i == 0) Some(60000L) else int(0, 60000),
+        if (i == 0) Some(-70000L) else int(-70000, 70000),
+        if (i == 0) Some(4000000000L) else int(0, 4000000000L),
+        if (i == 0) Some(0.5) else real(-1000, 1000),
+        if (i == 0) Some(1e300) else if (i == 1) Some(Double.NaN) else real(-1e300, 1e300))
+    }
+    val cols = Seq("u8", "i16", "u16", "i32", "u32", "f32", "f64")
+    // one input partition: the burn sees each tile's rows in input order
+    val df = rows.toDF("geometry" +: cols: _*).coalesce(1)
+    val path = java.nio.file.Files.createTempDirectory("tilestore-spans").toString
+    val metrics = RasterPipeline.toTileStore(df, "geometry", cols, path,
+      cellSize = 100, tileSize = 10000, overwrite = true).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val specs = new TileStore(path).header.columns
+    assert(specs.map(_.dtype) ==
+      Seq("uint8", "int16", "uint16", "int32", "uint32", "float32", "float64"))
+
+    // oracle: every row burned in input order into a double grid per
+    // assigned tile, then encoded by the Array[Double] region write
+    val assigned = df.select(graft.index.IndexExpressions.bng_index(col("geometry"), 10000L,
+      "interior")).collect().map(_.getSeq[String](0))
+    val tiles = assigned.toSeq.flatten.distinct.sorted
+    assert(tiles.size >= 4 && new TileStore(path).tiles() == tiles)
+    val refPath = java.nio.file.Files.createTempDirectory("tilestore-grid").toString
+    val ref = new TileStore(refPath)
+    var burnedTotal = 0L
+    for (tile <- tiles; (spec, ci) <- specs.zipWithIndex) {
+      val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
+      val grid = graft.raster.Rasterize.empty(minx, miny, 100, 100, spec.nodata)
+      rows.indices.filter(i => assigned(i).contains(tile)).foreach { i =>
+        val value = rows(i).productElement(ci + 1).asInstanceOf[Option[Any]]
+          .fold(spec.nodata)(v => v.asInstanceOf[Number].doubleValue)
+        graft.raster.Rasterize.burnGeometry(grid, Wkb.read(rows(i)._1), value)
+      }
+      val burned = ref.writeRegion(tile, spec.name, spec.dtype, grid.data, spec.nodata)
+      burnedTotal += burned
+      assert(metrics((tile, spec.name)) == burned, s"$tile ${spec.dtype} burned_cells")
+      val region = s"tile=$tile/${spec.name}.bin"
+      assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path, region)).toSeq ==
+        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(refPath, region)).toSeq,
+        s"$tile ${spec.dtype} region bytes")
+    }
+    assert(burnedTotal > 0 && metrics.size == tiles.size * specs.size)
+  }
+
+  test("toTileStore leaves no persisted RDD behind") {
+    val df = Seq((1L, Wkb.write(Wkb.box(100000, 100000, 300000, 200000)))).toDF("v", "geometry")
+    val path = java.nio.file.Files.createTempDirectory("tilestore-persist").toString
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val metrics = RasterPipeline.toTileStore(df, "geometry", Seq("v"), path,
+      cellSize = 100000, tileSize = 100000, overwrite = true)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    assert(metrics.columns.toSeq == Seq("tile", "column", "burned_cells", "n_rows"))
+    assert(metrics.collect().map(_.getLong(2)).sum == 2)
   }
 
   // ------------- resample matrix (reference tests/test_raster.py) -------
