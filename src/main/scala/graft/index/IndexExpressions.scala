@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.{Envelope, Geometry, Polygonal}
+import org.locationtech.jts.geom.{Envelope, Geometry, Polygonal, TopologyException}
+import org.locationtech.jts.geom.util.GeometryFixer
 
 /** Batched Catalyst cell encoders — the graft's replacement for the
   * reference's per-row Python UDF `calculate_bng_index`
@@ -303,7 +304,9 @@ case class SphericalCellId(left: Expression, right: Expression, res: Int,
   * envelope, so its (non-empty) interior lies in the envelope's interior,
   * which lies in the open cell. The interiors meet, so the geometry
   * intersects the cell and does not merely touch it. Zero-area, linear,
-  * point-like and multi-candidate geometries keep the JTS refine.
+  * point-like and multi-candidate geometries keep the JTS refine. A
+  * refine that throws `TopologyException` (an invalid MultiPolygon whose
+  * members overlap) is retried once on `GeometryFixer.fix(g)`.
   */
 case class BngIndexExpr(child: Expression, resolution: Long, how: String)
     extends UnaryExpression with CodegenFallback {
@@ -329,16 +332,20 @@ case class BngIndexExpr(child: Expression, resolution: Long, how: String)
       else {
         // Refine with real geometry tests; prepare once per row (rows with
         // large envelopes amortize over many candidate cells).
-        val pg = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(g)
-        candidates.filter { ref =>
-          val (minx, miny, maxx, maxy) = Bng.bounds(ref)
-          val cell = Wkb.box(minx, miny, maxx, maxy)
-          how match {
-            case "contains" => pg.contains(cell)
-            case "interior" => pg.intersects(cell) && !pg.touches(cell)
-            case _          => pg.intersects(cell)
+        def refine(geom: Geometry): Seq[String] = {
+          val pg = org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(geom)
+          candidates.filter { ref =>
+            val (minx, miny, maxx, maxy) = Bng.bounds(ref)
+            val cell = Wkb.box(minx, miny, maxx, maxy)
+            how match {
+              case "contains" => pg.contains(cell)
+              case "interior" => pg.intersects(cell) && !pg.touches(cell)
+              case _          => pg.intersects(cell)
+            }
           }
         }
+        try refine(g)
+        catch { case _: TopologyException => refine(GeometryFixer.fix(g)) }
       }
     refs
   }

@@ -16,13 +16,16 @@ import org.apache.spark.sql.functions._
   *      shuffle of (cell, count) pairs, tiny output).
   *   2. SALT FACTOR: cells whose count exceeds `targetRowsPerTask` get a
   *      salt factor ceil(count / target), broadcast as a tiny map.
-  *   3. SALTED KEY: cell#salt with salt = pmod(hash(id), factor) — rows in
-  *      cold cells keep salt 0, hot cells fan out to `factor` tasks.
+  *   3. SALTED KEY: cell#salt with salt = 1 + pmod(hash(entropy), factor)
+  *      for hot cells, so they fan out to `factor` tasks; rows in cold
+  *      cells keep salt 0, which also tells a task its cell is cold.
   *
-  * The salted key is ONLY a partitioning key: per-tile results are
-  * re-merged by the downstream combiner (e.g. rasterize merges partial
-  * tile arrays; counts re-aggregate), so output equals the unsalted plan
-  * (property-tested in SaltingSpec).
+  * The salted key is ONLY a partitioning key: per-cell results are
+  * re-merged downstream (counts re-aggregate in [[saltedCount]];
+  * `RasterPipeline.toTileStore` merges a hot tile's sparse ordered
+  * partials), so output equals the unsalted plan (OpsSpec's two salted
+  * tests, and the ordered-burn tests of ResumeSaltMetricsSpec and
+  * RasterStoreSpec).
   */
 object Salting {
 
@@ -30,7 +33,7 @@ object Salting {
   def cellCounts(df: DataFrame, cellCol: String): DataFrame =
     df.groupBy(col(cellCol)).agg(count(lit(1)).as("__cnt__"))
 
-  /** Attach a `__salt__` column: 0 for cold cells, 0..factor-1 for hot. */
+  /** Attach a `__salt__` column: 0 for cold cells, 1..factor for hot. */
   def withSalt(df: DataFrame, cellCol: String, saltEntropyCol: String,
       targetRowsPerTask: Long): DataFrame = {
     val factors = cellCounts(df, cellCol)
@@ -41,7 +44,7 @@ object Salting {
     df.join(broadcast(factors), Seq(cellCol), "left")
       .withColumn("__salt__",
         when(col("__factor__").isNull, lit(0))
-          .otherwise(pmod(hash(col(saltEntropyCol)), col("__factor__"))))
+          .otherwise(pmod(hash(col(saltEntropyCol)), col("__factor__")) + 1))
       .drop("__factor__")
   }
 

@@ -2,8 +2,9 @@ package graft.raster
 
 import graft.core.Constants
 import graft.index.IndexExpressions._
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 
 /** The reference's `DataFrameWrapper.to_zarr` (`dataframe.py:415-543`,
   * `_dataframe.py:401-673`) as a Spark-first distributed pipeline:
@@ -14,10 +15,11 @@ import org.apache.spark.sql.{DataFrame, Row}
   *      several driver round-trips per column (A3/A4); we collapse them.
   *   3. dtype/nodata ladder per column (Constants, `_dataframe.py:207-268,
   *      361-398`), skeleton header write (K1) with lookup/nodata attrs.
-  *   4. shuffle by tile (cell-indexed explode — U4's groupby), salting
-  *      hooks available upstream; per-tile scanline rasterize (R1) with
-  *      geometry clipped to the tile implicitly by grid bounds (R3);
-  *      executor-local region write (K2), metrics row out.
+  *   4. shuffle by tile (cell-indexed explode — U4's groupby; an ordered
+  *      burn salts hot tiles, see [[RasterPipeline.toTileStore]]);
+  *      per-tile scanline rasterize (R1) with geometry clipped to the
+  *      tile implicitly by grid bounds (R3); executor-local region write
+  *      (K2), metrics row out.
   *
   * One mandatory shuffle; tile writes idempotent; resume via SnapshotLog.
   */
@@ -29,6 +31,12 @@ object RasterPipeline {
     * @param lookups     categorize lookups to stamp into attrs
     * @param cellSize    raster cell size (reference: 10 m)
     * @param tileSize    tile edge (reference: 100 km; north rule: 10 km)
+    * @param orderCol    a long-castable column ordering overlapping rows
+    *                    (null sorts first); see "Overlap order"
+    * @param targetRowsPerTask with `orderCol`, a tile of more rows is
+    *                    burned by ceil(rows / target) salted tasks (north
+    *                    rule: "skew handled by salted repartitioning on
+    *                    hot cells"); unused without `orderCol`
     * @return metrics DataFrame (tile, column, burned_cells, n_rows),
     *         collected: no persisted RDD is left behind
     *
@@ -42,7 +50,22 @@ object RasterPipeline {
     * region write. burned_cells is counted as cells are written, exact
     * under overwrites. Stored bytes equal [[TileStore.writeRegion]] of
     * the [[Rasterize.burnGeometry]] grid (a NaN value under a NaN
-    * sentinel is stored as the sentinel's NaN).
+    * sentinel is stored as the sentinel's NaN). Points burn their
+    * half-open cell, so point data goes in as WKB points.
+    *
+    * Overlap order: where rows burn the same cell, the last row its burn
+    * task sees wins. Without `orderCol` that is shuffle arrival order,
+    * fixed for a given input on one local executor but not on a
+    * multi-executor cluster. With `orderCol` each task sorts its rows by
+    * (tile, salt, order, values), values after the null -> nodata
+    * coalesce and compared as Spark sorts doubles, so the (order, values)
+    * max wins each cell at any salting: the sequential burn in that
+    * order. Only tiles over `targetRowsPerTask` rows are salted; their
+    * tasks emit sparse partials (the cells they burned, each with its
+    * winner's order and values, nodata included) that one
+    * `groupByKey(tile)` merges by the same comparison before the region
+    * write, n_rows summed. Without `orderCol` there is no salting
+    * pre-pass and no merge stage.
     */
   def toTileStore(
       df: DataFrame, geometryCol: String, columns: Seq[String],
@@ -53,7 +76,9 @@ object RasterPipeline {
       canvasMaxX: Double = Constants.BngXMax.toDouble,
       canvasMaxY: Double = Constants.BngYMax.toDouble,
       overwrite: Boolean = false,
-      resume: Boolean = false): DataFrame = {
+      resume: Boolean = false,
+      orderCol: Option[String] = None,
+      targetRowsPerTask: Long = 1000000L): DataFrame = {
 
     val spark = df.sparkSession
     import spark.implicits._
@@ -105,84 +130,48 @@ object RasterPipeline {
     val valueCols =
       if (maskMode) Seq(lit(1.0))
       else specs.map(s => coalesce(col(s.name).cast("double"), lit(s.nodata)))
-    val preparedAll = df.select(
+    val preparedAll = df.select(Seq(
         explode(bng_index(col(geometryCol), tileSize.toLong, "interior")).as("__tile"),
         col(geometryCol).as("__geom"),
-        array(valueCols: _*).as("__vals"))
-    val prepared = (if (doneTiles.isEmpty) preparedAll
-      else preparedAll.filter(!col("__tile").isInCollection(doneTiles)))
-      .as[(String, Array[Byte], Seq[Double])]
+        array(valueCols: _*).as("__vals")) ++
+      orderCol.map(o => coalesce(col(o).cast("long"), lit(Long.MinValue)).as("__ord")): _*)
+    val prepared = if (doneTiles.isEmpty) preparedAll
+      else preparedAll.filter(!col("__tile").isInCollection(doneTiles))
 
-    val specNames = specs.map(_.name)
-    val specDtypes = specs.map(_.dtype)
-    val specNodata = specs.map(_.nodata)
-    val storePath = path
-
-    // HASH-partitioned shuffle on the tile key + sortWithinPartitions:
-    // each task streams ordered runs of tile rows through the burn — no
-    // per-group buffering, bounded memory per task regardless of tile
-    // size. Round 7: hash instead of repartitionByRange — the burn only
-    // needs tile-locality plus intra-partition order, and range
-    // partitioning paid a whole extra evaluation of the prepared subtree
-    // (geometry explode + value projection + any categorize joins) for
-    // its boundary-sampling pass, plus a per-partition pre-sort. Output
-    // regions/metrics are identical; a hot tile occupies one task under
-    // either partitioning.
-    val metrics = prepared
-      .repartition(col("__tile"))
-      .sortWithinPartitions(col("__tile"))
-      .as[(String, Array[Byte], Seq[Double])]
-      .mapPartitions { rows =>
-        val st = new TileStore(storePath)
-        // one dtype-width region buffer per column, reused for every tile
-        // of the task; each row's spans land in all of them
-        lazy val regions = specDtypes.indices.map(si =>
-          new RegionBytes(specDtypes(si), specNodata(si), tileCells * tileCells)).toArray
-        val bits = new Array[Long](specDtypes.length)
-        val spans = new Spans
-        var curTile: String = null
-        var frame: TileFrame = null
-        var burnedRows = 0L
-        val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
-        def flush(): Unit = if (curTile != null) {
-          specNames.indices.foreach { si =>
-            st.writeRegionBytes(curTile, specNames(si), regions(si).bytes)
-            out += ((curTile, specNames(si), regions(si).burnedCells, burnedRows))
+    val burner = new TileBurner(path, specs, cellSize, tileCells)
+    val metrics = orderCol match {
+      case None =>
+        // HASH-partitioned shuffle on the tile key + sortWithinPartitions:
+        // each task streams ordered runs of tile rows through the burn —
+        // no per-group buffering, bounded memory per task regardless of
+        // tile size. Hash, not range: the burn only needs tile-locality
+        // plus intra-partition order, and range partitioning paid a whole
+        // extra evaluation of the prepared subtree for its boundary
+        // sampling. A hot tile occupies one task.
+        prepared
+          .repartition(col("__tile"))
+          .sortWithinPartitions(col("__tile"))
+          .as[(String, Array[Byte], Array[Double])]
+          .mapPartitions { rows =>
+            burner.burn(rows.map { case (tile, geom, vals) => (tile, 0, geom, vals, 0L) })
+              .flatMap(burner.metrics)
           }
-        }
-        rows.foreach { case (tileRef, geomBytes, vals) =>
-          if (tileRef != curTile) {
-            flush()
-            curTile = tileRef
-            burnedRows = 0L
-            val (minx, miny, _, _) = graft.index.Bng.bounds(tileRef)
-            frame = TileFrame(minx, miny, cellSize, tileCells)
-            regions.foreach(_.reset())
-          }
-          var si = 0
-          while (si < bits.length) {
-            bits(si) = regions(si).bitsOf(vals(si)); si += 1
-          }
-          Rasterize.spans(frame, graft.geo.Wkb.read(geomBytes), spans)
-          var k = 0
-          while (k < spans.size) {
-            val row = spans.row(k) * tileCells
-            si = 0
-            while (si < bits.length) {
-              regions(si).fill(row + spans.c0(k), row + spans.c1(k), bits(si)); si += 1
-            }
-            k += 1
-          }
-          burnedRows += 1
-        }
-        flush()
-        out.iterator
-      }
-      .toDF("tile", "column", "burned_cells", "n_rows")
+      case Some(_) =>
+        // Salt entropy is the geometry, so rows sharing an order still
+        // spread over a hot tile's tasks.
+        graft.ops.Salting.withSalt(prepared, "__tile", "__geom", targetRowsPerTask)
+          .repartition(col("__tile"), col("__salt__"))
+          .sortWithinPartitions(col("__tile"), col("__salt__"), col("__ord"), col("__vals"))
+          .select(col("__tile"), col("__salt__"), col("__geom"), col("__vals"), col("__ord"))
+          .as[(String, Int, Array[Byte], Array[Double], Long)]
+          .mapPartitions(rows => burner.burn(rows))
+          .groupByKey(_.tile)
+          .flatMapGroups((_, parts) => burner.merge(parts))
+    }
     // Sinks execute eagerly (the reference forces the grouped-map with a
     // noop sink, dataframe.py:540-543); the collected frame also keeps
     // downstream reuse from re-running the side-effecting writes.
-    collected(metrics)
+    collected(metrics.toDF("tile", "column", "burned_cells", "n_rows"))
   }
 
   /** `df` run once and returned as a local frame of its rows (same
@@ -268,154 +257,170 @@ object RasterPipeline {
       }
   }
 
-  /** Salted point rasterization for skewed tiles (north rule: "skew
-    * handled by salted repartitioning on hot cells").
-    *
-    * A hot tile (dense urban cell at web scale) would make one task burn
-    * orders of magnitude more rows than the median. Here hot tiles fan
-    * out over `ceil(count/targetRowsPerTask)` salted tasks, each burning
-    * a PARTIAL grid that tracks, per cell, the burn value AND the highest
-    * `orderCol` that wrote it; the per-tile merge keeps the value with
-    * the highest order — bit-identical to the unsalted last-write-wins-
-    * by-order result (property-tested in RasterStoreSpec).
-    */
-  /** Geometry variant of the salted path: same order-merged partial
-    * grids, but each row burns a full WKB geometry (scanline) instead of
-    * a point — `Rasterize.burnGeometryOrdered` tracks per-cell write
-    * order inside the burn.
-    */
-  def toTileStoreSaltedGeoms(
-      df: DataFrame, geometryCol: String, orderCol: String,
-      valueCol: String, path: String,
-      cellSize: Double, tileSize: Double,
-      targetRowsPerTask: Long,
-      overwrite: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val row = df.agg(min(col(valueCol)).cast("double"),
-      max(col(valueCol)).cast("double")).head()
-    val (dtype, nodata) = Constants.dtypeAndNodata(row.getDouble(0), row.getDouble(1))
-    val store = new TileStore(path)
-    store.init(StoreHeader("EPSG:27700", cellSize, 0d, 0d,
-      Constants.BngXMax.toDouble, Constants.BngYMax.toDouble, tileSize,
-      Seq(ColumnSpec(valueCol, dtype, nodata)), Map("salted" -> "true")), overwrite)
-    val tileCells = math.round(tileSize / cellSize).toInt
-
-    val rows = df.select(
-      explode(bng_index(col(geometryCol), tileSize.toLong, "interior")).as("__tile"),
-      col(geometryCol).as("__g"),
-      col(orderCol).cast("long").as("__ord"),
-      col(valueCol).cast("double").as("__v"))
-    val salted = graft.ops.Salting.withSalt(rows, "__tile", "__ord", targetRowsPerTask)
-      .as[(String, Array[Byte], Long, Double, Int)]
-
-    val partials = salted
-      .groupByKey { case (tile, _, _, _, salt) => (tile, salt) }
-      .mapGroups { (key: (String, Int), it: Iterator[(String, Array[Byte], Long, Double, Int)]) =>
-        val tile = key._1
-        val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
-        val grid = Rasterize.empty(minx, miny, cellSize, tileCells, fill = nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        it.foreach { case (_, wkb, o, v, _) =>
-          Rasterize.burnGeometryOrdered(grid, ord, graft.geo.Wkb.read(wkb), v, o)
-        }
-        (tile, grid.data.toSeq, ord.toSeq)
-      }
-
-    val metrics = partials
-      .groupByKey(_._1)
-      .mapGroups { (tile: String, parts: Iterator[(String, Seq[Double], Seq[Long])]) =>
-        val data = Array.fill(tileCells * tileCells)(nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        parts.foreach { case (_, pd, po) =>
-          var i = 0
-          while (i < data.length) {
-            if (Rasterize.ordWins(po(i), pd(i), ord(i), data(i))) {
-              ord(i) = po(i); data(i) = pd(i)
-            }
-            i += 1
-          }
-        }
-        (tile, valueCol, new TileStore(path).writeRegion(tile, valueCol, dtype, data, nodata))
-      }
-      .toDF("tile", "column", "burned_cells")
-    collected(metrics)
-  }
-
-  def toTileStoreSaltedPoints(
-      df: DataFrame, xCol: String, yCol: String, orderCol: String,
-      valueCol: String, path: String,
-      cellSize: Double, tileSize: Double,
-      targetRowsPerTask: Long,
-      canvasMaxX: Double = Constants.BngXMax.toDouble,
-      canvasMaxY: Double = Constants.BngYMax.toDouble,
-      overwrite: Boolean = false): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    val row = df.agg(min(col(valueCol)).cast("double"),
-      max(col(valueCol)).cast("double")).head()
-    val (dtype, nodata) = Constants.dtypeAndNodata(row.getDouble(0), row.getDouble(1))
-    val spec = ColumnSpec(valueCol, dtype, nodata)
-    val store = new TileStore(path)
-    store.init(StoreHeader("EPSG:27700", cellSize, 0d, 0d, canvasMaxX,
-      canvasMaxY, tileSize, Seq(spec), Map("salted" -> "true")), overwrite)
-
-    val tileCells = math.round(tileSize / cellSize).toInt
-    val pts = df.select(
-      graft.index.IndexExpressions.bng_index_point(
-        col(xCol).cast("double"), col(yCol).cast("double"), tileSize.toLong).as("__tile"),
-      col(xCol).cast("double").as("__x"), col(yCol).cast("double").as("__y"),
-      col(orderCol).cast("long").as("__ord"), col(valueCol).cast("double").as("__v"))
-
-    val salted = graft.ops.Salting.withSalt(pts, "__tile", "__ord", targetRowsPerTask)
-      .as[(String, Double, Double, Long, Double, Int)]
-
-    // phase 1: burn partial (value, order) grids per (tile, salt)
-    val partials = salted
-      .groupByKey { case (tile, _, _, _, _, salt) => (tile, salt) }
-      .mapGroups { (key: (String, Int), rows: Iterator[(String, Double, Double, Long, Double, Int)]) =>
-        val tile = key._1
-        val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
-        val grid = Rasterize.empty(minx, miny, cellSize, tileCells, fill = nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        rows.foreach { case (_, x, y, o, v, _) =>
-          val c = grid.colOf(x); val r = grid.rowOf(y)
-          if (c >= 0 && r >= 0) {
-            val idx = grid.idx(r, c)
-            if (Rasterize.ordWins(o, v, ord(idx), grid.data(idx))) {
-              ord(idx) = o; grid.data(idx) = v
-            }
-          }
-        }
-        (tile, grid.data.toSeq, ord.toSeq)
-      }
-
-    // phase 2: merge partials per tile by order, write region
-    val metrics = partials
-      .groupByKey(_._1)
-      .mapGroups { (tile: String, parts: Iterator[(String, Seq[Double], Seq[Long])]) =>
-        val data = Array.fill(tileCells * tileCells)(nodata)
-        val ord = Array.fill(tileCells * tileCells)(Long.MinValue)
-        parts.foreach { case (_, pd, po) =>
-          var i = 0
-          while (i < data.length) {
-            if (Rasterize.ordWins(po(i), pd(i), ord(i), data(i))) {
-              ord(i) = po(i); data(i) = pd(i)
-            }
-            i += 1
-          }
-        }
-        (tile, valueCol, new TileStore(path).writeRegion(tile, valueCol, dtype, data, nodata))
-      }
-      .toDF("tile", "column", "burned_cells")
-    collected(metrics)
-  }
-
   /** Reference `_dataframe.py:444-448`: lookup attr gets a nodata entry. */
   private def injectNodata(lookup: String, nodata: Double): String = {
     val nd = if (nodata == math.rint(nodata) && !nodata.isNaN)
       nodata.toLong.toString else nodata.toString
     lookup.stripSuffix("}") + s", 'nodata': $nd}"
+  }
+}
+
+/** One (tile, salt) group as a [[TileBurner]] task hands it on: a tile
+  * it wrote (`burned` per column, `cells` null), or a hot tile's sparse
+  * partial — the `cells` it wrote, each with its winning row's order
+  * (`ords`) and values (`vals`, one per column, cell by cell).
+  */
+private[raster] final case class TileBurn(tile: String, nRows: Long,
+    burned: Array[Long], cells: Array[Int], ords: Array[Long], vals: Array[Double])
+
+/** `toTileStore`'s executor side: the span burn of one task's sorted
+  * rows and the per-tile merge of a hot tile's partials. Holds settings
+  * only; each call keeps its own buffers.
+  */
+private[raster] final class TileBurner(path: String, specs: Seq[ColumnSpec],
+    cellSize: Double, tileCells: Int) extends Serializable {
+  private val nCols = specs.length
+  private val area = tileCells * tileCells
+
+  /** One region buffer per column, every cell nodata. */
+  private def regions(): Array[RegionBytes] = {
+    val rs = specs.map(s => new RegionBytes(s.dtype, s.nodata, area)).toArray
+    rs.foreach(_.reset())
+    rs
+  }
+
+  /** Writes `tile`'s regions; returns burned_cells per column. */
+  private def write(tile: String, rs: Array[RegionBytes]): Array[Long] = {
+    val st = new TileStore(path)
+    specs.indices.map { si =>
+      st.writeRegionBytes(tile, specs(si).name, rs(si).bytes)
+      rs(si).burnedCells
+    }.toArray
+  }
+
+  /** A written tile's metrics rows (tile, column, burned_cells, n_rows). */
+  def metrics(b: TileBurn): Iterator[(String, String, Long, Long)] =
+    specs.indices.iterator.map(si => (b.tile, specs(si).name, b.burned(si), b.nRows))
+
+  /** Burns rows (tile, salt, WKB, values, order) that arrive grouped by
+    * (tile, salt), each group in burn order; the last row to burn a cell
+    * wins it. Salt 0 (a cold tile) fills the region buffers, one memory
+    * fill plus the burned spans per tile, and writes them. A salt above
+    * 0 (a hot tile) keeps each cell's last order and values, and becomes
+    * a sparse partial of the cells it burned.
+    */
+  def burn(rows: Iterator[(String, Int, Array[Byte], Array[Double], Long)]): Iterator[TileBurn] = {
+    lazy val rs = regions()
+    lazy val hit = new Array[Boolean](area)
+    lazy val cellOrd = new Array[Long](area)
+    lazy val cellVals = new Array[Double](area * nCols)
+    val touched = new scala.collection.mutable.ArrayBuilder.ofInt
+    val bits = new Array[Long](nCols)
+    val spans = new Spans
+    var tile: String = null
+    var salt = 0
+    var frame: TileFrame = null
+    var nRows = 0L
+    val out = scala.collection.mutable.ArrayBuffer.empty[TileBurn]
+    def flush(): Unit = if (tile != null) {
+      if (salt == 0) out += TileBurn(tile, nRows, write(tile, rs), null, null, null)
+      else {
+        val cells = touched.result()
+        touched.clear()
+        cells.foreach(hit(_) = false)
+        out += TileBurn(tile, nRows, null, cells, cells.map(cellOrd),
+          cells.flatMap(c => cellVals.slice(c * nCols, (c + 1) * nCols)))
+      }
+    }
+    rows.foreach { case (t, s, geom, vals, ord) =>
+      if (t != tile || s != salt) {
+        flush()
+        tile = t
+        salt = s
+        nRows = 0L
+        val (minx, miny, _, _) = graft.index.Bng.bounds(t)
+        frame = TileFrame(minx, miny, cellSize, tileCells)
+        if (s == 0) rs.foreach(_.reset())
+      }
+      Rasterize.spans(frame, graft.geo.Wkb.read(geom), spans)
+      if (salt == 0) {
+        var si = 0
+        while (si < nCols) {
+          bits(si) = rs(si).bitsOf(vals(si)); si += 1
+        }
+        var k = 0
+        while (k < spans.size) {
+          val row = spans.row(k) * tileCells
+          si = 0
+          while (si < nCols) {
+            rs(si).fill(row + spans.c0(k), row + spans.c1(k), bits(si)); si += 1
+          }
+          k += 1
+        }
+      } else {
+        var k = 0
+        while (k < spans.size) {
+          val row = spans.row(k) * tileCells
+          var i = row + spans.c0(k)
+          while (i < row + spans.c1(k)) {
+            if (!hit(i)) {
+              hit(i) = true
+              touched += i
+            }
+            cellOrd(i) = ord
+            System.arraycopy(vals, 0, cellVals, i * nCols, nCols)
+            i += 1
+          }
+          k += 1
+        }
+      }
+      nRows += 1
+    }
+    flush()
+    out.iterator
+  }
+
+  /** One tile's burns: a written tile passes its metrics through; a hot
+    * tile's partials are merged, keeping per cell the entry that sorts
+    * last by (order, values), and the region is written with n_rows
+    * summed over the partials.
+    */
+  def merge(parts: Iterator[TileBurn]): Iterator[(String, String, Long, Long)] = {
+    val ps = parts.toArray
+    if (ps.head.cells == null) metrics(ps.head)
+    else {
+      val best = Array.fill(area)(-1L) // (partial << 32 | entry) winning each cell
+      for (p <- ps.indices; k <- ps(p).cells.indices) {
+        val c = ps(p).cells(k)
+        val b = best(c)
+        if (b < 0 || after(ps(p), k, ps((b >>> 32).toInt), b.toInt))
+          best(c) = (p.toLong << 32) | k
+      }
+      val rs = regions()
+      for (p <- ps.indices; k <- ps(p).cells.indices) {
+        val c = ps(p).cells(k)
+        if (best(c) == ((p.toLong << 32) | k)) {
+          var si = 0
+          while (si < nCols) {
+            rs(si).fill(c, c + 1, rs(si).bitsOf(ps(p).vals(k * nCols + si))); si += 1
+          }
+        }
+      }
+      val tile = ps.head.tile
+      metrics(TileBurn(tile, ps.map(_.nRows).sum, write(tile, rs), null, null, null))
+    }
+  }
+
+  /** Entry `i` of `a` sorts after entry `j` of `b` by (order, values),
+    * values compared as the burn's sort compares doubles.
+    */
+  private def after(a: TileBurn, i: Int, b: TileBurn, j: Int): Boolean = {
+    var cmp = java.lang.Long.compare(a.ords(i), b.ords(j))
+    var si = 0
+    while (cmp == 0 && si < nCols) {
+      cmp = SQLOrderingUtil.compareDoubles(a.vals(i * nCols + si), b.vals(j * nCols + si))
+      si += 1
+    }
+    cmp > 0
   }
 }

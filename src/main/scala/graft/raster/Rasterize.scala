@@ -67,17 +67,17 @@ final class Spans {
   * reproduce:
   *  - a cell is burned iff its CENTER is inside the polygon
   *    (center-sampling, GDAL all_touched=False);
-  *  - burn order = input order, LAST write wins on overlap;
+  *  - geometries burn in the order they are given and the LAST write
+  *    wins on overlap (`RasterPipeline.toTileStore` documents which
+  *    order its rows reach the burn in);
   *  - empty geometries / empty tiles short-circuit
   *    (`_vector.py:218-227, 279-285`).
   *
   * There is one scanline, [[spans]]: it yields a geometry's burned cells
   * as row spans (after Raptor's pixel runs, VLDB 2019), so a burn costs
   * per burned run and never per tile cell. [[burnGeometry]] fills a
-  * double grid from those spans, [[burnGeometryOrdered]] applies the
-  * salted path's order check per span cell, and
-  * `RasterPipeline.toTileStore` writes them straight into a region's
-  * dtype bytes.
+  * double grid from those spans, and `RasterPipeline.toTileStore`
+  * writes them straight into a region's dtype bytes.
   */
 object Rasterize {
 
@@ -208,43 +208,6 @@ object Rasterize {
         s += 1
       }
       i += 1
-    }
-  }
-
-  /** Order-aware write decision, shared by every ordered-burn site (the
-    * geometry burn, the point burn, and the cross-partial merge): the
-    * winning row per cell is the LEXICOGRAPHIC MAX of (ord, value). With
-    * unique order values this is exactly sequential last-write-wins; with
-    * duplicated orders the value tie-break keeps the result deterministic
-    * at ANY partitioning (a bare >= or > would let the nondeterministic
-    * task/iterator order pick the winner). `ord` must be > Long.MinValue
-    * (the empty-cell sentinel).
-    */
-  @inline def ordWins(ord: Long, value: Double, curOrd: Long, curValue: Double): Boolean =
-    ord > curOrd || (ord == curOrd && value > curValue)
-
-  /** Order-aware burn for salted/parallel partial grids: merging partial
-    * grids by per-cell (ord, value) max reproduces the exact sequential
-    * last-write-wins result regardless of how rows were split across
-    * salted tasks (see [[ordWins]] for the duplicate-order tie-break).
-    * The order check runs on the geometry's span cells only; a cell
-    * reported twice is unchanged by the second check, which ties.
-    */
-  def burnGeometryOrdered(grid: TileGrid, ordGrid: Array[Long],
-      geom: Geometry, value: Double, ord: Long): Unit = {
-    val s = spans(grid.frame, geom, new Spans)
-    var k = 0
-    while (k < s.size) {
-      var i = grid.idx(s.row(k), s.c0(k))
-      val end = grid.idx(s.row(k), s.c1(k))
-      while (i < end) {
-        if (ordWins(ord, value, ordGrid(i), grid.data(i))) {
-          ordGrid(i) = ord
-          grid.data(i) = value
-        }
-        i += 1
-      }
-      k += 1
     }
   }
 

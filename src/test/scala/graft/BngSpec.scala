@@ -5,13 +5,12 @@ import graft.geo.Wkb
 import graft.index.{Bng, BngIndexExpr, BngIndexIdsExpr}
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.locationtech.jts.geom.{Coordinate, Geometry, Polygon}
+import org.locationtech.jts.geom.{Coordinate, Geometry, Polygon, TopologyException}
 import org.locationtech.jts.geom.prep.PreparedGeometryFactory
-import org.locationtech.jts.geom.util.AffineTransformation
+import org.locationtech.jts.geom.util.{AffineTransformation, GeometryFixer}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
-class BngSpec extends AnyFunSuite {
+class BngSpec extends SparkSpec {
 
   def check(p: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)
@@ -161,5 +160,39 @@ class BngSpec extends AnyFunSuite {
       }
     }
     assert(single > 1000, s"only $single single-candidate cases")
+  }
+
+  test("a MultiPolygon with overlapping members gets its GeometryFixer repair's cells") {
+    // two overlapping boxes, together across TQ38 and TQ48
+    val g = Wkb.factory.createMultiPolygon(Array(
+      Wkb.box(531000, 181000, 545000, 185000).asInstanceOf[Polygon],
+      Wkb.box(535000, 182000, 540000, 188000).asInstanceOf[Polygon]))
+    assert(!g.isValid)
+    intercept[TopologyException](jtsRefs(g, 10000, "interior"))
+    val fixed = GeometryFixer.fix(g)
+    Seq("intersects", "interior").foreach { how =>
+      val expected = jtsRefs(fixed, 10000, how)
+      assert(expected == Seq("TQ38", "TQ48"), how)
+      assert(refs(g, 10000, how) == expected, how)
+      val ids = BngIndexIdsExpr(Literal(Wkb.write(g)), 10000, how).eval()
+        .asInstanceOf[GenericArrayData].toLongArray().toSeq
+      assert(ids == expected.map { ref =>
+        val (e, n, r) = Bng.parse(ref)
+        Bng.cellId(e.toDouble, n.toDouble, r)
+      }, how)
+    }
+    // the raster write assigns tiles through the same refine
+    val s = spark
+    import s.implicits._
+    val metrics = graft.raster.RasterPipeline.toTileStore(Seq((1L, Wkb.write(g))).toDF("v", "geometry"),
+      "geometry", Seq("v"), tempDir("overlap"), cellSize = 1000, tileSize = 10000, overwrite = true)
+      .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(metrics.keySet == Set("TQ38", "TQ48"))
+    metrics.foreach { case (tile, burned) =>
+      val (minx, miny, _, _) = Bng.bounds(tile)
+      val grid = graft.raster.Rasterize.empty(minx, miny, 1000, 10, Double.NaN)
+      graft.raster.Rasterize.burnGeometry(grid, g, 1)
+      assert(burned == grid.data.count(!_.isNaN), tile)
+    }
   }
 }

@@ -44,7 +44,7 @@ class RasterStoreSpec extends SparkSpec {
       (i.toLong, Wkb.write(Wkb.box(minx, miny, minx + 100000, miny + 100000)))
     }
     val df = rows.toDF("val", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("tilestore").toString
+    val path = tempDir("tilestore")
 
     val metrics = RasterPipeline.toTileStore(df, "geometry", Seq("val"), path,
       cellSize = 100000, tileSize = 100000, overwrite = true)
@@ -73,7 +73,7 @@ class RasterStoreSpec extends SparkSpec {
         (v, Wkb.write(Wkb.box(cx - 10000, cy - 10000, cx + 10000, cy + 10000)))
       }
     val df = rows.toDF("land_cover", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("tilestore2").toString
+    val path = tempDir("tilestore2")
     RasterPipeline.toTileStore(df, "geometry", Seq("land_cover"), path,
       lookups = Map("land_cover" -> "{'grassland': 0, 'woodland': 1, 'wetland': 2}"),
       cellSize = 10000, tileSize = 100000, overwrite = true)
@@ -93,7 +93,7 @@ class RasterStoreSpec extends SparkSpec {
       (1.5, Wkb.write(Wkb.box(100000, 100000, 200000, 200000))),
       (2.25, Wkb.write(Wkb.box(300000, 300000, 400000, 400000))))
     val df = rows.toDF("temp", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("tilestoreF").toString
+    val path = tempDir("tilestoreF")
     RasterPipeline.toTileStore(df, "geometry", Seq("temp"), path,
       cellSize = 100000, tileSize = 100000, overwrite = true)
     val store = new TileStore(path)
@@ -109,7 +109,7 @@ class RasterStoreSpec extends SparkSpec {
   test("mask mode: no columns -> uint8 presence mask, nodata 0") {
     val df = Seq((Wkb.write(Wkb.box(100000, 100000, 200000, 200000)), 1))
       .toDF("geometry", "ignored")
-    val path = java.nio.file.Files.createTempDirectory("tilestore3").toString
+    val path = tempDir("tilestore3")
     RasterPipeline.toTileStore(df, "geometry", Seq.empty, path,
       cellSize = 100000, tileSize = 100000, overwrite = true)
     val store = new TileStore(path)
@@ -119,7 +119,7 @@ class RasterStoreSpec extends SparkSpec {
 
   test("string column must be categorized first (reference error)") {
     val df = Seq(("x", Wkb.write(Wkb.point(1, 1)))).toDF("cat", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("tilestore4").toString
+    val path = tempDir("tilestore4")
     val e = intercept[IllegalArgumentException] {
       RasterPipeline.toTileStore(df, "geometry", Seq("cat"), path, overwrite = true)
     }
@@ -127,7 +127,7 @@ class RasterStoreSpec extends SparkSpec {
   }
 
   test("round-1 DEFLATE regions stay readable (frame sniff)") {
-    val path = java.nio.file.Files.createTempDirectory("tilestore-deflate").toString
+    val path = tempDir("tilestore-deflate")
     val st = new TileStore(path)
     st.init(graft.raster.StoreHeader("EPSG:27700", 100000, 0, 0, 700000,
       1300000, 100000, Seq.empty, Map.empty), overwrite = true)
@@ -168,7 +168,7 @@ class RasterStoreSpec extends SparkSpec {
     ("float64", Double.NaN, Seq(-1e300, 0.1, 2.5e-310)))
 
   private def readbackStore(): String = {
-    val path = java.nio.file.Files.createTempDirectory("tilestore-readback").toString
+    val path = tempDir("tilestore-readback")
     val st = new TileStore(path)
     st.init(graft.raster.StoreHeader("EPSG:27700", 10000, 0, 0, 700000, 1300000, 100000,
       readbackDtypes.map { case (dt, nd, _) => graft.raster.ColumnSpec(s"c_$dt", dt, nd) },
@@ -237,7 +237,7 @@ class RasterStoreSpec extends SparkSpec {
   }
 
   test("a failed region write leaves no temp file behind") {
-    val path = java.nio.file.Files.createTempDirectory("tilestore-tmp").toString
+    val path = tempDir("tilestore-tmp")
     val st = new TileStore(path)
     // a non-empty directory where the region file should land makes the
     // final move fail
@@ -250,7 +250,7 @@ class RasterStoreSpec extends SparkSpec {
   }
 
   test("overwrite guard (reference _warn_zarr_overwrite)") {
-    val path = java.nio.file.Files.createTempDirectory("tilestore5").toString
+    val path = tempDir("tilestore5")
     val st = new TileStore(path)
     val hdr = graft.raster.StoreHeader("EPSG:27700", 10, 0, 0, 100, 100, 100,
       Seq(graft.raster.ColumnSpec("a", "uint8", 255d)), Map.empty)
@@ -260,7 +260,7 @@ class RasterStoreSpec extends SparkSpec {
   }
 
   test("region write/read round-trips every dtype") {
-    val path = java.nio.file.Files.createTempDirectory("tilestore6").toString
+    val path = tempDir("tilestore6")
     val st = new TileStore(path)
     st.init(graft.raster.StoreHeader("EPSG:27700", 100000, 0, 0, 700000,
       1300000, 100000, Seq.empty, Map.empty), overwrite = true)
@@ -284,10 +284,10 @@ class RasterStoreSpec extends SparkSpec {
       if i % 2 == 0
     } yield (i.toLong, Wkb.write(Wkb.box(c * 100000.0, (12 - r) * 100000.0,
       c * 100000.0 + 100000, (12 - r) * 100000.0 + 100000)))
-    val src = java.nio.file.Files.createTempDirectory("rsrc").toString
+    val src = tempDir("rsrc")
     RasterPipeline.toTileStore(rows.toDF("val", "geometry"), "geometry",
       Seq("val"), src, cellSize = 100000, tileSize = 100000, overwrite = true)
-    val dst = java.nio.file.Files.createTempDirectory("rdst").toString
+    val dst = tempDir("rdst")
     RasterPipeline.resampleStore(spark, src, dst, dstCellSize = 50000,
       categorical = true, overwrite = true)
     val canvas = new TileStore(dst).assembleCanvas("val")
@@ -358,7 +358,7 @@ class RasterStoreSpec extends SparkSpec {
     val cols = Seq("u8", "i16", "u16", "i32", "u32", "f32", "f64")
     // one input partition: the burn sees each tile's rows in input order
     val df = rows.toDF("geometry" +: cols: _*).coalesce(1)
-    val path = java.nio.file.Files.createTempDirectory("tilestore-spans").toString
+    val path = tempDir("tilestore-spans")
     val metrics = RasterPipeline.toTileStore(df, "geometry", cols, path,
       cellSize = 100, tileSize = 10000, overwrite = true).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -372,7 +372,7 @@ class RasterStoreSpec extends SparkSpec {
       "interior")).collect().map(_.getSeq[String](0))
     val tiles = assigned.toSeq.flatten.distinct.sorted
     assert(tiles.size >= 4 && new TileStore(path).tiles() == tiles)
-    val refPath = java.nio.file.Files.createTempDirectory("tilestore-grid").toString
+    val refPath = tempDir("tilestore-grid")
     val ref = new TileStore(refPath)
     var burnedTotal = 0L
     for (tile <- tiles; (spec, ci) <- specs.zipWithIndex) {
@@ -396,13 +396,91 @@ class RasterStoreSpec extends SparkSpec {
 
   test("toTileStore leaves no persisted RDD behind") {
     val df = Seq((1L, Wkb.write(Wkb.box(100000, 100000, 300000, 200000)))).toDF("v", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("tilestore-persist").toString
+    val path = tempDir("tilestore-persist")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val metrics = RasterPipeline.toTileStore(df, "geometry", Seq("v"), path,
       cellSize = 100000, tileSize = 100000, overwrite = true)
     assert(spark.sparkContext.getPersistentRDDs.keySet == before)
     assert(metrics.columns.toSeq == Seq("tile", "column", "burned_cells", "n_rows"))
     assert(metrics.collect().map(_.getLong(2)).sum == 2)
+  }
+
+  test("ordered toTileStore: salted hot tiles == unsalted == sequential burn in (order, value) order") {
+    // 100 m cells on 10 km tiles. Most rows fall in TQ38, hot at a target
+    // of 40 rows per task; the rest spread over its neighbours. Orders
+    // repeat, so values break ties. Column a is an integer with nulls
+    // (uint8, nodata 255); b is a real with nulls and NaN (NaN nodata).
+    val rnd = new scala.util.Random(23)
+    val f = Wkb.factory
+    def pt(x: Double, y: Double) = new Coordinate(x, y)
+    def shape(x: Double, y: Double): Geometry = rnd.nextInt(5) match {
+      case 0 => Wkb.point(x, y)
+      case 1 => f.createLineString(Array(pt(x, y),
+        pt(x + 3000 * rnd.nextDouble(), y + 2000 * rnd.nextDouble())))
+      case 2 => f.createGeometryCollection(Array(Wkb.point(x, y),
+        Wkb.box(x + 100, y + 100, x + 900, y + 1300)))
+      case _ => Wkb.box(x, y, x + 200 + 3000 * rnd.nextDouble(), y + 200 + 3000 * rnd.nextDouble())
+    }
+    val shapes =
+      (0 until 300).map(_ => shape(530000 + 9000 * rnd.nextDouble(), 180000 + 9000 * rnd.nextDouble())) ++
+      (0 until 60).map(_ => shape(520000 + 30000 * rnd.nextDouble(), 170000 + 30000 * rnd.nextDouble()))
+    val rows = shapes.map { g =>
+      (Wkb.write(g), rnd.nextInt(40).toLong,
+        if (rnd.nextDouble() < 0.1) None else Some(rnd.nextInt(200).toLong),
+        if (rnd.nextDouble() < 0.1) None
+        else if (rnd.nextDouble() < 0.1) Some(Double.NaN) else Some(rnd.nextInt(64) / 4.0))
+    } ++ Seq(
+      // the highest order over part of TQ38: (1000, nodata, NaN) beats
+      // (1000, 7, NaN) where they overlap, so nodata wins those cells
+      (Wkb.write(Wkb.box(532000, 182000, 536000, 186000)), 1000L, None, Some(Double.NaN)),
+      (Wkb.write(Wkb.box(534000, 184000, 538000, 188000)), 1000L, Some(7L), None))
+    val df = rows.toDF("geometry", "ord", "a", "b")
+    def write(target: Long): (String, Map[(String, String), (Long, Long)]) = {
+      val path = tempDir("tilestore-ordered")
+      val metrics = RasterPipeline.toTileStore(df, "geometry", Seq("a", "b"), path,
+        cellSize = 100, tileSize = 10000, overwrite = true,
+        orderCol = Some("ord"), targetRowsPerTask = target).collect()
+      (path, metrics.map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap)
+    }
+    val (salted, saltedMetrics) = write(40)
+    val (plain, plainMetrics) = write(Long.MaxValue)
+    val specs = new TileStore(salted).header.columns
+    assert(specs.map(_.dtype) == Seq("uint8", "float64") && specs.head.nodata == 255d)
+
+    // oracle: every tile's rows burned in (order, a, b) order, nulls as
+    // nodata, into a double grid per column, encoded by the region write
+    val assigned = df.select(graft.index.IndexExpressions.bng_index(col("geometry"), 10000L,
+      "interior")).collect().map(_.getSeq[String](0))
+    val tiles = assigned.toSeq.flatten.distinct.sorted
+    assert(assigned.count(_.contains("TQ38")) > 40, "TQ38 is not hot")
+    assert(new TileStore(salted).tiles() == tiles && new TileStore(plain).tiles() == tiles)
+    def values(i: Int): Seq[Double] =
+      Seq(rows(i)._3.fold(specs(0).nodata)(_.toDouble), rows(i)._4.getOrElse(specs(1).nodata))
+    val order = rows.indices.sortBy(i => (rows(i)._2, values(i)(0), values(i)(1)))(
+      Ordering.Tuple3(Ordering.Long, Ordering.Double.TotalOrdering, Ordering.Double.TotalOrdering))
+    val refPath = tempDir("tilestore-ordered-ref")
+    val ref = new TileStore(refPath)
+    var nodataWins = 0
+    for (tile <- tiles; (spec, ci) <- specs.zipWithIndex) {
+      val (minx, miny, _, _) = graft.index.Bng.bounds(tile)
+      // -Inf marks unburned cells, so burned nodata winners can be counted
+      val grid = graft.raster.Rasterize.empty(minx, miny, 100, 100, Double.NegativeInfinity)
+      val burnedBy = order.filter(i => assigned(i).contains(tile))
+      burnedBy.foreach(i => graft.raster.Rasterize.burnGeometry(grid, Wkb.read(rows(i)._1), values(i)(ci)))
+      nodataWins += grid.data.count(v => v == spec.nodata || (v.isNaN && spec.nodata.isNaN))
+      val cells = grid.data.map(v => if (v == Double.NegativeInfinity) spec.nodata else v)
+      val burned = ref.writeRegion(tile, spec.name, spec.dtype, cells, spec.nodata)
+      val expected = (burned, burnedBy.size.toLong)
+      assert(saltedMetrics((tile, spec.name)) == expected, s"$tile ${spec.name} salted metrics")
+      assert(plainMetrics((tile, spec.name)) == expected, s"$tile ${spec.name} unsalted metrics")
+      val region = s"tile=$tile/${spec.name}.bin"
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(refPath, region)).toSeq
+      Seq(salted, plain).foreach { p =>
+        assert(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p, region)).toSeq == bytes,
+          s"$p $region")
+      }
+    }
+    assert(nodataWins > 0 && saltedMetrics.size == tiles.size * specs.size)
   }
 
   // ------------- resample matrix (reference tests/test_raster.py) -------

@@ -14,7 +14,7 @@ class ResumeSaltMetricsSpec extends SparkSpec {
       (i.toLong, Wkb.write(Wkb.box(cx - 10000, cy - 10000, cx + 10000, cy + 10000)))
     }
     val df = rows.toDF("v", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("resume").toString
+    val path = tempDir("resume")
     val m1 = RasterPipeline.toTileStore(df, "geometry", Seq("v"), path,
       cellSize = 10000, tileSize = 100000, overwrite = true)
     val canvas1 = new TileStore(path).assembleCanvas("v").flatten.toSeq
@@ -44,11 +44,13 @@ class ResumeSaltMetricsSpec extends SparkSpec {
         else java.lang.Long.remainderUnsigned(h >>> 7, 1300000L).toDouble
       (i.toLong, x, y, (i % 7).toLong)
     }
-    val df = pts.toDF("ord", "x", "y", "v")
+    val df = pts.map { case (ord, x, y, v) => (ord, Wkb.write(Wkb.point(x, y)), v) }
+      .toDF("ord", "geometry", "v")
 
-    val saltedPath = java.nio.file.Files.createTempDirectory("salted").toString
-    RasterPipeline.toTileStoreSaltedPoints(df, "x", "y", "ord", "v", saltedPath,
-      cellSize = 100, tileSize = 10000, targetRowsPerTask = 200, overwrite = true)
+    val saltedPath = tempDir("salted")
+    RasterPipeline.toTileStore(df, "geometry", Seq("v"), saltedPath,
+      cellSize = 100, tileSize = 10000, overwrite = true,
+      orderCol = Some("ord"), targetRowsPerTask = 200)
 
     // unsalted oracle: single-threaded burn ordered by ord
     val unsalted = new scala.collection.mutable.HashMap[(String, Int), Double]()
@@ -89,9 +91,10 @@ class ResumeSaltMetricsSpec extends SparkSpec {
     val df = geoms.map { case (id, v, x, y) =>
       (id, v, Wkb.write(Wkb.box(x, y, x + 3000, y + 3000)))
     }.toDF("ord", "v", "geometry")
-    val path = java.nio.file.Files.createTempDirectory("saltedG").toString
-    RasterPipeline.toTileStoreSaltedGeoms(df, "geometry", "ord", "v", path,
-      cellSize = 500, tileSize = 10000, targetRowsPerTask = 100, overwrite = true)
+    val path = tempDir("saltedG")
+    RasterPipeline.toTileStore(df, "geometry", Seq("v"), path,
+      cellSize = 500, tileSize = 10000, overwrite = true,
+      orderCol = Some("ord"), targetRowsPerTask = 100)
 
     // sequential oracle: burn in ord order over the full canvas per tile
     val store = new TileStore(path)
@@ -130,12 +133,13 @@ class ResumeSaltMetricsSpec extends SparkSpec {
       val y = 180000.0 + java.lang.Long.remainderUnsigned(h >>> 13, 5000L)
       (7L, x, y, (i % 11).toLong)
     }
-    val df = pts.toDF("ord", "x", "y", "v")
+    val df = pts.map { case (ord, x, y, v) => (ord, Wkb.write(Wkb.point(x, y)), v) }
+      .toDF("ord", "geometry", "v")
     def canvas(targetRowsPerTask: Long): Map[(String, Int), Double] = {
-      val path = java.nio.file.Files.createTempDirectory("dupord").toString
-      RasterPipeline.toTileStoreSaltedPoints(df, "x", "y", "ord", "v", path,
-        cellSize = 100, tileSize = 10000, targetRowsPerTask = targetRowsPerTask,
-        overwrite = true)
+      val path = tempDir("dupord")
+      RasterPipeline.toTileStore(df, "geometry", Seq("v"), path,
+        cellSize = 100, tileSize = 10000, overwrite = true,
+        orderCol = Some("ord"), targetRowsPerTask = targetRowsPerTask)
       val store = new TileStore(path)
       val spec = store.header.columns.head
       store.tiles().flatMap { t =>

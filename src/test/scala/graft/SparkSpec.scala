@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Outcome
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Path}
 
 /** Shared local session for all suites (getOrCreate reuses one JVM-wide
   * session, so suites don't pay startup each).
@@ -16,6 +19,28 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf0: String = "/root/testdata/sf0.001"
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh temp directory, deleted with everything in it when the
+    * running test ends (pass or fail).
+    */
+  def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs += dir
+    dir.toString
+  }
+
+  override def withFixture(test: NoArgTest): Outcome =
+    try super.withFixture(test)
+    finally {
+      tempDirs.foreach { dir =>
+        val tree = Files.walk(dir)
+        try tree.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+        finally tree.close()
+      }
+      tempDirs.clear()
+    }
 
   /** Row-set equality helper (schema-name + sorted-row comparison) — the
     * chispa `assert_df_equality` equivalent (SURVEY.md §5).
