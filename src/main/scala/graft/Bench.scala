@@ -375,8 +375,7 @@ object Bench {
     * (round-5: total 78.5s vs round-4's 46.8s on unchanged code). The
     * probe brackets each measurement phase; an artifact whose probes sit
     * in one band was measured on one host state and is comparable
-    * round-over-round, one that isn't is visibly tainted. Same kernel
-    * the ScalingBench admissibility gate uses child-side.
+    * round-over-round, one that isn't is visibly tainted.
     */
   def hostProbe(): Double = {
     var x = 12345L; var i = 0L; val m = 200000000L
@@ -469,8 +468,8 @@ object Bench {
     // kernel, auxiliary kernels, solo children): recorded in the JSON so
     // a contended measurement window is visible IN the artifact instead
     // of reading as a phantom operator regression in the next round's
-    // comparison. probe_band_ok uses the ScalingBench admissibility
-    // band (max <= 1.15 * min across all probes).
+    // comparison. probe_band_ok is the admissibility band
+    // (max <= 1.15 * min across all probes).
     val probes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     val diskProbes = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     def probe(tag: String): Unit = {
@@ -510,12 +509,12 @@ object Bench {
 
     // headline metric: three full warm-up runs (C2 reaches steady state
     // after several passes over the generated code), best of three timed
-    // (methodology matches ScalingBench / BENCH.md)
+    // (methodology matches BENCH.md)
     (1 to 3).foreach(_ => spatialPipelineThroughput(spark, benchRows))
     val rowsPerSec = (1 to 3).map(_ => spatialPipelineThroughput(spark, benchRows)).max
 
-    // north-star-width variant (H3 res 7-12 + S2 per row) — the scaling
-    // gate's kernel; recorded here for round-over-round comparability
+    // north-star-width variant (H3 res 7-12 + S2 per row) — the kernel of
+    // BENCH.md's round 1-7 scaling record; kept for comparability
     spatialPipelineThroughputMultiRes(spark, benchRows) // warm
     val multiResRowsPerSec =
       (1 to 2).map(_ => spatialPipelineThroughputMultiRes(spark, benchRows)).max

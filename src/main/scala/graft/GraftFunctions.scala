@@ -71,9 +71,6 @@ object GraftFunctions {
         if (es.length > 2) litStr(es(2), "intersects") else "intersects")),
     "bng_index_flags" -> ((es: Seq[Expression]) =>
       graft.index.BngIndexFlagsExpr(es(0), litLong(es(1), "resolution"))),
-    "spherical_cells" -> ((es: Seq[Expression]) =>
-      graft.index.SphericalCells(es(0), es(1), litLong(es(2), "h3Res").toInt,
-        litLong(es(3), "s2Level").toInt)),
     "s2_cell_lonlat" -> ((es: Seq[Expression]) =>
       graft.index.S2CellLatLng(es(0), es(1), litLong(es(2), "level").toInt)),
     "rhp_sign" -> ((es: Seq[Expression]) =>

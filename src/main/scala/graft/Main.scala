@@ -21,7 +21,6 @@ object Main {
     cmd match {
       case "verify" => Verify.main(args.drop(1))
       case "bench" => Bench.main(args.drop(1))
-      case "scaling" => run.ScalingBench.main(args.drop(1))
       case "pipeline" =>
         val nPages = args.lift(1).map(_.toLong).getOrElse(100000L)
         val workDir = args.lift(2).getOrElse(
@@ -42,7 +41,7 @@ object Main {
           s"(snapshots: ${new graft.input.SnapshotLog(workDir).snapshots().size})")
         spark.stop()
       case other =>
-        System.err.println(s"unknown command '$other' (pipeline|verify|bench|scaling)")
+        System.err.println(s"unknown command '$other' (pipeline|verify|bench)")
         sys.exit(2)
     }
   }

@@ -93,9 +93,10 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
     * boxed the key and both coords AND copied the ~100-byte WKB out of
     * the (broadcast) row on EVERY row, ~150 B of garbage per candidate;
     * at full 32-thread saturation the collector became the join stage's
-    * scaling wall (ProfileScaling: encode 0.81 eff, join 0.66). Here the
-    * key/x/y are unboxed and the WKB child's code is emitted INSIDE the
-    * cache-miss branch, so the hit path (every row after the first per
+    * scaling wall (round-4 stage profile in BENCH.md: encode 0.81 eff,
+    * join 0.66). Here the key/x/y are unboxed and the WKB child's code
+    * is emitted INSIDE the cache-miss branch, so the hit path (every row
+    * after the first per
     * polygon per JVM) never touches the bytes and allocates at most the
     * one Coordinate the point locator reads.
     *

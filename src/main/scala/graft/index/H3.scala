@@ -234,113 +234,6 @@ object H3 {
     pack(parentRes, f, (qr >> 32).toInt, qr.toInt)
   }
 
-  /** Finest-res cell id plus the full parent chain down to `resFrom`,
-    * written finest-first into `out` (length >= resTo-resFrom+1). The
-    * chain is stepwise (res r's id derives from res r+1's), matching
-    * [[SphericalCellsMulti]]'s historical semantics. Static helper so
-    * generated code calls one method per row.
-    */
-  def cellIdChainInto(latDeg: Double, lngDeg: Double, resFrom: Int,
-      resTo: Int, out: Array[Long]): Unit = {
-    var id = cellId(latDeg, lngDeg, resTo)
-    out(0) = id
-    var r = resTo - 1
-    while (r >= resFrom) {
-      id = parent(id, r)
-      out(resTo - r) = id
-      r -= 1
-    }
-  }
-
-  /** Approximate hex edge length in metres at a resolution (gnomonic
-    * plane units x Earth radius; good to ~2x near face edges).
-    */
-  def edgeMetres(res: Int): Double = resSizes(res) * 6371000.0
-
-  /** Cells at `res` covering a BNG envelope (conservative superset):
-    * sample the envelope at half-edge spacing, take each sample's cell
-    * plus its ring-1 neighbours (closing sampling gaps). Requires the
-    * envelope to stay on one icosahedron face (true for the BNG canvas,
-    * H3S2Spec) — cross-face covers would need seam adjacency.
-    */
-  def coverEnvelopeBng(minx: Double, miny: Double, maxx: Double, maxy: Double,
-      res: Int): Seq[Long] = {
-    val edge = edgeMetres(res)
-    // Sample at half-edge spacing; for envelopes huge relative to the cell
-    // (fine res over big boxes) cap the samples per axis and widen the
-    // closure disk instead — no fixed metre floor, so no silent escape of
-    // cells between samples at any res. Total work tracks the true cell
-    // count of the envelope either way (disk area ~ k^2 compensates the
-    // coarser sampling exactly).
-    val maxPerAxis = 128.0
-    val span = math.max(maxx - minx, maxy - miny)
-    val spacing = math.max(edge / 2.0, span / maxPerAxis)
-    // Worst-case planar distance from any envelope point to a sample is
-    // the grid half-diagonal; convert to hex steps (neighbour centers are
-    // sqrt(3)*edge apart) with 2x headroom for gnomonic distortion.
-    val halfDiag = spacing * 0.7072
-    val k = math.max(1, math.ceil(2.0 * halfDiag / (math.sqrt(3.0) * edge)).toInt)
-    val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-    var x = minx
-    while (x <= maxx + spacing) {
-      var y = miny
-      while (y <= maxy + spacing) {
-        val (lat, lng) = Transform.bngToWgs84Deg(math.min(x, maxx), math.min(y, maxy))
-        val c = cellId(lat, lng, res)
-        out += c
-        var rr = 1
-        while (rr <= k) { ring(c, rr).foreach(out += _); rr += 1 }
-        y += spacing
-      }
-      x += spacing
-    }
-    out.toSeq
-  }
-
-  /** Cells at `res` covering a GEOMETRY (conservative superset, tighter
-    * than the envelope cover for thin/non-convex shapes): the same
-    * envelope sampling grid, but a sample only contributes its closure
-    * disk when it lies within the grid half-diagonal of the geometry.
-    * Guarantee unchanged: every geometry point p has a grid sample q with
-    * |p - q| <= halfDiag; that q passes the distance prefilter, and
-    * cell(p) is inside q's closure disk. For an axis-aligned box this
-    * degenerates to the envelope cover; for a triangle it halves the
-    * candidate fan-out, and for a diagonal corridor the cut is ~10x
-    * (measured in H3S2Spec / BENCH.md).
-    */
-  def coverGeometryBng(geom: org.locationtech.jts.geom.Geometry, res: Int): Seq[Long] = {
-    val env = geom.getEnvelopeInternal
-    val (minx, miny, maxx, maxy) = (env.getMinX, env.getMinY, env.getMaxX, env.getMaxY)
-    val edge = edgeMetres(res)
-    val maxPerAxis = 128.0
-    val span = math.max(maxx - minx, maxy - miny)
-    val spacing = math.max(edge / 2.0, span / maxPerAxis)
-    val halfDiag = spacing * 0.7072
-    val k = math.max(1, math.ceil(2.0 * halfDiag / (math.sqrt(3.0) * edge)).toInt)
-    val keepDist = halfDiag * 1.001
-    val gf = geom.getFactory
-    val coord = new org.locationtech.jts.geom.Coordinate()
-    val out = scala.collection.mutable.LinkedHashSet.empty[Long]
-    var x = minx
-    while (x <= maxx + spacing) {
-      var y = miny
-      while (y <= maxy + spacing) {
-        val sx = math.min(x, maxx); val sy = math.min(y, maxy)
-        coord.setX(sx); coord.setY(sy)
-        if (geom.isWithinDistance(gf.createPoint(coord), keepDist)) {
-          val (lat, lng) = Transform.bngToWgs84Deg(sx, sy)
-          val c = cellId(lat, lng, res)
-          out += c
-          var rr = 1
-          while (rr <= k) { ring(c, rr).foreach(out += _); rr += 1 }
-        }
-        y += spacing
-      }
-      x += spacing
-    }
-    out.toSeq
-  }
-
   /** Hex ring (axial k-ring boundary) around a cell, same face. */
   def ring(id: Long, k: Int): Seq[Long] = {
     val res = resOf(id); val f = faceOfId(id)

@@ -70,24 +70,6 @@ object IndexExpressions {
   def s2_index_point(x: Column, y: Column, level: Int): Column =
     toCol(SphericalCellId(expr(x), expr(y), level, "s2"))
 
-  /** Fused H3 + S2 encoder: one inverse-TM + Helmert transform feeds both
-    * indexes (struct<h3, s2>). The transform dominates the per-row cost,
-    * so fusing nearly halves the encode stage when both ids are needed
-    * (the common case for the dual-indexed web table).
-    */
-  def spherical_cells(x: Column, y: Column, h3Res: Int, s2Level: Int): Column =
-    toCol(SphericalCells(expr(x), expr(y), h3Res, s2Level))
-
-  /** Full north-star indexing width: ONE datum transform feeding H3 ids
-    * at every res in [resFrom, resTo] (7-12 per the north rule) plus the
-    * S2 cell — struct<h3s: array<long>, s2: long>. The finest res is
-    * computed once and coarser ids derive via the parent walk (cheaper
-    * than re-indexing per res).
-    */
-  def spherical_cells_multi(x: Column, y: Column, resFrom: Int, resTo: Int,
-      s2Level: Int): Column =
-    toCol(SphericalCellsMulti(expr(x), expr(y), resFrom, resTo, s2Level))
-
   /** S2 cell id straight from WGS84 (latDeg, lngDeg) — the global-data
     * twin of [[s2_index_point]] (which takes BNG metres). Used by the
     * seam-safe spherical radius join, where inputs span the antimeridian
@@ -139,101 +121,6 @@ case class S2CellLatLng(left: Expression, right: Expression, level: Int)
     copy(left = l, right = r)
 }
 
-/** (easting, northing) -> struct(h3s: array(resTo-resFrom+1 ids, finest
-  * first), s2: long); one transform, one finest-res hex index, parents
-  * derived upward.
-  */
-case class SphericalCellsMulti(left: Expression, right: Expression,
-    resFrom: Int, resTo: Int, s2Level: Int)
-    extends BinaryExpression {
-  require(resFrom <= resTo, "resFrom must be <= resTo")
-  override def dataType: DataType = StructType(Seq(
-    StructField("h3s", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("s2", LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(x: Any, y: Any): Any = {
-    val ll = Transform.tlLatLng()
-    Transform.bngToWgs84DegInto(x.asInstanceOf[Double], y.asInstanceOf[Double], ll)
-    val ids = new Array[Long](resTo - resFrom + 1)
-    H3.cellIdChainInto(ll(0), ll(1), resFrom, resTo, ids)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](
-        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(ids),
-        S2.cellId(ll(0), ll(1), s2Level)))
-  }
-
-  /** Real codegen (this was the scaling-gate kernel's hot loop as a
-    * CodegenFallback: per-row boxing of both child doubles + interpreted
-    * dispatch): unboxed doubles into static helpers, the id array built
-    * by one call, wrapped as UnsafeArrayData without element boxing.
-    */
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val ll = ctx.freshName("ll")
-      val ids = ctx.freshName("ids")
-      val vals = ctx.freshName("vals")
-      val n = resTo - resFrom + 1
-      s"""
-         |double[] $ll = graft.index.Transform.tlLatLng();
-         |graft.index.Transform.bngToWgs84DegInto($x, $y, $ll);
-         |long[] $ids = new long[$n];
-         |graft.index.H3.cellIdChainInto($ll[0], $ll[1], $resFrom, $resTo, $ids);
-         |Object[] $vals = new Object[2];
-         |$vals[0] = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($ids);
-         |$vals[1] = Long.valueOf(graft.index.S2.cellId($ll[0], $ll[1], $s2Level));
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($vals);
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
-/** (easting, northing) -> struct(h3: Long, s2: Long) with ONE datum
-  * transform shared by both encoders.
-  */
-case class SphericalCells(left: Expression, right: Expression, h3Res: Int,
-    s2Level: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("h3", LongType, nullable = false),
-    StructField("s2", LongType, nullable = false)))
-  override def nullIntolerant: Boolean = true
-  override protected def nullSafeEval(x: Any, y: Any): Any = {
-    val (lat, lng) = Transform.bngToWgs84Deg(
-      x.asInstanceOf[Double], y.asInstanceOf[Double])
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](H3.cellId(lat, lng, h3Res), S2.cellId(lat, lng, s2Level)))
-  }
-
-  /** Real codegen (this sits in the headline kernel's hot loop): unboxed
-    * child doubles straight into static mirror-class calls, one shared
-    * thread-local transform buffer — no interpreted-eval dispatch, no
-    * per-row boxing of the inputs.
-    */
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val ll = ctx.freshName("ll")
-      val vals = ctx.freshName("vals")
-      s"""
-         |double[] $ll = graft.index.Transform.tlLatLng();
-         |graft.index.Transform.bngToWgs84DegInto($x, $y, $ll);
-         |Object[] $vals = new Object[2];
-         |$vals[0] = Long.valueOf(graft.index.H3.cellId($ll[0], $ll[1], $h3Res));
-         |$vals[1] = Long.valueOf(graft.index.S2.cellId($ll[0], $ll[1], $s2Level));
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow($vals);
-       """.stripMargin
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** (easting, northing) -> H3-style or S2 cell id; the batched Catalyst
   * "cell encoder" the north rule names. The full chain (inverse transverse
   * Mercator + Helmert + spherical index) is pure double math per row.
@@ -255,10 +142,10 @@ case class SphericalCellId(left: Expression, right: Expression, res: Int,
   /** Memoized transform (thread-local single-entry): several cell
     * encoders over the same (x, y) row in one projection — h3 + s2, or
     * multiple resolutions — pay for ONE inverse-TM + Helmert chain
-    * between them, with zero per-row allocation (the struct-returning
-    * [[SphericalCells]] shares the transform too, but materializes a
-    * row + boxed longs per call — ~100 B of garbage per input row, real
-    * GC pressure when every hardware thread is saturated).
+    * between them, with zero per-row allocation (a struct-returning
+    * encoder would materialize a row + boxed longs per call — ~100 B of
+    * garbage per input row, real GC pressure when every hardware thread
+    * is saturated).
     */
   override protected def doGenCode(
       ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,

@@ -137,80 +137,8 @@ object S2 {
     (face, stToIJ(uvToST(u)), stToIJ(uvToST(v)))
   }
 
-  /** Cells at `level` covering a BNG envelope (conservative superset).
-    *
-    * Valid because the BNG canvas lies entirely on one S2 face (face 2,
-    * verified in H3S2Spec), where the (i, j) leaf grid is a plain square
-    * grid. The image of the rectangle under TM-inverse + ST projection is
-    * curved, and its ij extrema lie on the boundary — so sample the
-    * boundary adaptively, DOUBLING the per-edge density until the ij
-    * bounding box stops moving (the sagitta between adjacent samples is
-    * then sub-converged), and pad one cover cell for the residue. A fixed
-    * 3x3 sample under-covered large envelopes at fine levels, where the
-    * curvature between corner samples exceeds a cell. Cross-face
-    * envelopes are rejected (would need S2's face-adjacency tables).
-    */
-  def coverEnvelopeBng(minx: Double, miny: Double, maxx: Double, maxy: Double,
-      level: Int): Seq[Long] = {
-    val (face, step, iMin, iMax, jMin, jMax) = ijBounds(minx, miny, maxx, maxy, level)
-    val out = Seq.newBuilder[Long]
-    var i = iMin & -step
-    while (i <= iMax) {
-      var j = jMin & -step
-      while (j <= jMax) {
-        out += parent(fromFaceIJ(face, i, j), level)
-        j += step
-      }
-      i += step
-    }
-    out.result().distinct
-  }
-
-  /** Converged (face, step, iMin, iMax, jMin, jMax) of an envelope's
-    * image in the face ij grid (shared by both covers).
-    */
-  private def ijBounds(minx: Double, miny: Double, maxx: Double, maxy: Double,
-      level: Int): (Int, Int, Int, Int, Int, Int) = {
-    def boundarySamples(nPerEdge: Int): Seq[(Int, Int, Int)] = {
-      val ts = (0 to nPerEdge).map(_.toDouble / nPerEdge)
-      val pts =
-        ts.map(t => (minx + t * (maxx - minx), miny)) ++
-        ts.map(t => (minx + t * (maxx - minx), maxy)) ++
-        ts.map(t => (minx, miny + t * (maxy - miny))) ++
-        ts.map(t => (maxx, miny + t * (maxy - miny)))
-      pts.map { case (x, y) =>
-        val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-        faceIJ(lat, lng)
-      }
-    }
-    def bounds(s: Seq[(Int, Int, Int)]): (Int, Int, Int, Int) =
-      (s.map(_._2).min, s.map(_._2).max, s.map(_._3).min, s.map(_._3).max)
-    var n = 2
-    var samples = boundarySamples(n)
-    var b = bounds(samples)
-    var converged = false
-    while (!converged && n < 1024) {
-      n *= 2
-      val next = boundarySamples(n)
-      val nb = bounds(next)
-      converged = nb == b
-      samples = next
-      b = nb
-    }
-    val faces = samples.map(_._1).distinct
-    require(faces.size == 1,
-      s"envelope spans S2 faces $faces — cross-face covers unsupported")
-    val face = faces.head
-    val step = 1 << (MaxLevel - level)
-    val iMin = math.max(0, (b._1 & -step) - step)
-    val iMax = math.min((1 << MaxLevel) - 1, b._2 + step)
-    val jMin = math.max(0, (b._3 & -step) - step)
-    val jMax = math.min((1 << MaxLevel) - 1, b._4 + step)
-    (face, step, iMin, iMax, jMin, jMax)
-  }
-
   /** Mean Earth radius used by every spherical-distance surface in the
-    * engine (matches H3.edgeMetres' sphere).
+    * engine.
     */
   val EarthRadiusMetres: Double = 6371000.0
 
@@ -292,55 +220,6 @@ object S2 {
       case 4 => (v, -1, -u)
       case _ => (v, u, -1)
     }
-
-  /** BNG (e, n) of the point at leaf-grid fractional (i, j) on `face`. */
-  private def ijToBng(face: Int, i: Double, j: Double): (Double, Double) = {
-    val u = stToUV(i / (1 << MaxLevel))
-    val v = stToUV(j / (1 << MaxLevel))
-    val (x, y, z) = faceUVToXYZ(face, u, v)
-    val lat = math.toDegrees(math.atan2(z, math.hypot(x, y)))
-    val lng = math.toDegrees(math.atan2(y, x))
-    Transform.wgs84ToBng(lat, lng)
-  }
-
-  /** Cells at `level` covering a GEOMETRY (conservative superset, tighter
-    * than the envelope cover for thin/non-convex shapes): the same ij
-    * walk, but a cell is kept only when the geometry comes within that
-    * cell's own center-to-corner radius (projected to BNG metres, exact
-    * per cell) of its center. Any geometry point inside the cell is
-    * within that radius of the center, so containment is preserved; far
-    * interior-void cells of the bounding box are pruned.
-    */
-  def coverGeometryBng(geom: org.locationtech.jts.geom.Geometry,
-      level: Int): Seq[Long] = {
-    val env = geom.getEnvelopeInternal
-    val (face, step, iMin, iMax, jMin, jMax) =
-      ijBounds(env.getMinX, env.getMinY, env.getMaxX, env.getMaxY, level)
-    val gf = geom.getFactory
-    val out = Seq.newBuilder[Long]
-    var i = iMin & -step
-    while (i <= iMax) {
-      var j = jMin & -step
-      while (j <= jMax) {
-        val (cx, cy) = ijToBng(face, i + 0.5 * step, j + 0.5 * step)
-        var radius = 0.0
-        var ci = 0
-        while (ci < 4) {
-          val (ex, ey) = ijToBng(face,
-            i + (if ((ci & 1) == 0) 0.0 else step.toDouble),
-            j + (if ((ci & 2) == 0) 0.0 else step.toDouble))
-          radius = math.max(radius, math.hypot(ex - cx, ey - cy))
-          ci += 1
-        }
-        val center = gf.createPoint(new org.locationtech.jts.geom.Coordinate(cx, cy))
-        if (geom.isWithinDistance(center, radius * 1.05))
-          out += parent(fromFaceIJ(face, i, j), level)
-        j += step
-      }
-      i += step
-    }
-    out.result().distinct
-  }
 
   def isValid(id: Long): Boolean =
     id != 0 && face(id) < 6 &&

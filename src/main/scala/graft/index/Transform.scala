@@ -212,12 +212,11 @@ object Transform {
     out(1) = catmullRom(lo0, lo1, lo2, lo3, fy)
   }
 
-  /** Thread-local (lat, lng) scratch for generated code — the codegen'd
-    * encoders write the transform result here instead of allocating a
+  /** Thread-local (lat, lng) scratch for [[bngToWgs84Memo]], so a memo
+    * miss writes the transform result here instead of allocating a
     * 2-array per row.
     */
   private val tlBuf = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](2))
-  def tlLatLng(): Array[Double] = tlBuf.get()
 
   // Thread-local single-entry memo for the datum transform: when several
   // independent scalar expressions in ONE projection index the same row

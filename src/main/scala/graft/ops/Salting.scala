@@ -3,14 +3,14 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Explicit skew handling by salted repartitioning on hot cells
-  * (north-rule: "skew handled by salted repartitioning on hot H3 cells").
+/** Explicit skew handling by salting hot cells (north-rule: "skew
+  * handled by salted repartitioning on hot H3 cells").
   *
   * At web scale the cell distribution is Zipfian — a handful of cells
   * (dense urban squares) hold orders of magnitude more rows than the
   * median. AQE's skew-join splitting only fires inside sort-merge joins;
-  * the groupBy-tile materialization path needs pre-shuffle salting, which
-  * is what this implements:
+  * per-cell aggregation and the ordered tile burn need a salt on the key
+  * before their shuffle, which [[withSalt]] attaches:
   *
   *   1. PRE-PASS: aggregate per-cell counts (one cheap map-side-combined
   *      shuffle of (cell, count) pairs, tiny output).
@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * The salted key is ONLY a partitioning key: per-cell results are
   * re-merged downstream (counts re-aggregate in [[saltedCount]];
-  * `RasterPipeline.toTileStore` merges a hot tile's sparse ordered
-  * partials), so output equals the unsalted plan (OpsSpec's two salted
-  * tests, and the ordered-burn tests of ResumeSaltMetricsSpec and
-  * RasterStoreSpec).
+  * `RasterPipeline.toTileStore` shuffles on (tile, salt) and merges a
+  * hot tile's sparse ordered partials), so output equals the unsalted
+  * plan (OpsSpec's salted-count test, q33, and the ordered-burn tests of
+  * ResumeSaltMetricsSpec and RasterStoreSpec).
   */
 object Salting {
 
@@ -46,17 +46,6 @@ object Salting {
         when(col("__factor__").isNull, lit(0))
           .otherwise(pmod(hash(col(saltEntropyCol)), col("__factor__")) + 1))
       .drop("__factor__")
-  }
-
-  /** Salted repartition: shuffle on (cell, salt) so hot cells spread over
-    * multiple tasks while cold cells stay single-task.
-    */
-  def saltedRepartition(df: DataFrame, cellCol: String, saltEntropyCol: String,
-      targetRowsPerTask: Long, numPartitions: Int = 0): DataFrame = {
-    val salted = withSalt(df, cellCol, saltEntropyCol, targetRowsPerTask)
-    if (numPartitions > 0)
-      salted.repartition(numPartitions, col(cellCol), col("__salt__"))
-    else salted.repartition(col(cellCol), col("__salt__"))
   }
 
   /** Two-phase salted aggregation: partial agg on (cell, salt), final agg

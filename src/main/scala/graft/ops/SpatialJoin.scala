@@ -5,22 +5,24 @@ import graft.index.IndexExpressions._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Cell-indexed spatial join (graft operator J5, SURVEY.md §2.3): the
-  * classic PBSM filter-refine plan expressed declaratively so Catalyst
-  * keeps every optimization.
+/** Cell-indexed spatial joins (graft operator J5, SURVEY.md §2.3).
+  * The point-in-polygon join is the classic PBSM filter-refine plan
+  * expressed declaratively so Catalyst keeps every optimization:
   *
   *   1. FILTER: index both sides into BNG cells at `resolution`
   *      (points: one cell via pure integer math; polygons: array of
-  *      intersecting cells, exploded) and equi-join on the cell ref.
+  *      intersecting cells, exploded) and equi-join on the packed cell id.
   *   2. REFINE: exact JTS predicate on the candidate pairs.
-  *   3. DEDUPE: a polygon spanning k cells meets a point at most once per
-  *      cell — `dropDuplicates` on the pair key removes multi-cell dupes.
   *
-  * Scale shape: the join key is a string/long cell id, so the physical
-  * strategy is Catalyst's choice — broadcast-hash when the polygon side is
-  * small (the common dim-table case; we hint it explicitly), sort-merge on
+  * A point falls in exactly one cell, so a (point, polygon) pair meets
+  * in at most one cell and needs no dedupe.
+  *
+  * Scale shape: the join key is a long cell id, so the physical strategy
+  * is Catalyst's choice — broadcast-hash when the polygon side is small
+  * (the common dim-table case; we hint it explicitly), sort-merge on
   * cell otherwise. At 10^12 rows the points side never shuffles more than
   * once, and AQE + the salting helpers (Salting.scala) split hot cells.
+  * The radius and kNN joins below reuse the same cell-candidate idea.
   */
 object SpatialJoin {
 
@@ -61,37 +63,6 @@ object SpatialJoin {
         col(x), col(y), predicate))
       .drop("__cell__", "__gkey__")
     refined
-  }
-
-  /** Point-in-polygon join keyed by SPHERICAL cells (H3-style or S2)
-    * instead of BNG squares — same filter-refine plan, the cell id comes
-    * from the spherical encoders and the polygon side from envelope
-    * covers. Results are identical to the BNG-keyed join (the refine is
-    * exact either way); the cell system only changes candidate-set size.
-    */
-  def pointInPolygonSpherical(
-      points: DataFrame, x: String, y: String,
-      polygons: DataFrame, geomCol: String,
-      system: String, res: Int,
-      broadcastPolys: Boolean = true): DataFrame = {
-    import graft.index.IndexExpressions._
-    // Geometry-aware covers: prune candidate cells far from the polygon
-    // (thin/non-convex shapes), cutting join fan-out vs envelope covers.
-    val coverUdf = udf { (wkb: Array[Byte]) =>
-      val g = graft.geo.Wkb.read(wkb)
-      if (system == "s2") graft.index.S2.coverGeometryBng(g, res)
-      else graft.index.H3.coverGeometryBng(g, res)
-    }
-    val polyCells = polygons.withColumn("__cell__", explode(coverUdf(col(geomCol))))
-      .withColumn("__gkey__", st_geom_key(col(geomCol)))
-    val polyIndexed = if (broadcastPolys) broadcast(polyCells) else polyCells
-    val ptCells = points.withColumn("__cell__",
-      if (system == "s2") s2_index_point(col(x), col(y), res)
-      else h3_index_point(col(x), col(y), res))
-    ptCells.join(polyIndexed, Seq("__cell__"))
-      .filter(st_predicate_point_keyed(col("__gkey__"), col(geomCol),
-        col(x), col(y), "covers"))
-      .drop("__cell__", "__gkey__")
   }
 
   /** Radius (range) join: every (query, point) pair within `radius`
@@ -268,32 +239,5 @@ object SpatialJoin {
     else
       resolved.select(col(qId), col(pId), col("dist_m"),
         col("__rank__").as("rank"))
-  }
-
-  /** Generic geometry-vs-geometry spatial join on any JTS predicate.
-    * Both sides explode to cells; pairs meeting in multiple cells are
-    * deduped on the caller-supplied key columns.
-    */
-  def geomJoin(
-      left: DataFrame, leftGeom: String, leftKey: String,
-      right: DataFrame, rightGeom: String, rightKey: String,
-      resolution: Long = 10000L,
-      predicate: String = "intersects",
-      broadcastRight: Boolean = false): DataFrame = {
-    val l = left.withColumn("__cell__",
-      explode(bng_index_ids(col(leftGeom), resolution, "intersects")))
-    val r0 = right.withColumn("__cell__",
-      explode(bng_index_ids(col(rightGeom), resolution, "intersects")))
-    val r = if (broadcastRight) broadcast(r0) else r0
-    val pred = predicate match {
-      case "contains"   => st_contains(col(leftGeom), col(rightGeom))
-      case "covers"     => st_covers(col(leftGeom), col(rightGeom))
-      case "within"     => st_within(col(leftGeom), col(rightGeom))
-      case _            => st_intersects(col(leftGeom), col(rightGeom))
-    }
-    l.join(r, Seq("__cell__"))
-      .filter(pred)
-      .drop("__cell__")
-      .dropDuplicates(leftKey, rightKey)
   }
 }

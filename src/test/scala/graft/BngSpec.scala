@@ -78,6 +78,11 @@ class BngSpec extends SparkSpec {
     BngIndexExpr(Literal(Wkb.write(g)), res, how).eval().asInstanceOf[GenericArrayData]
       .array.toSeq.map(_.toString)
 
+  /** `bng_index_ids` packed cell ids of `g`. */
+  private def ids(g: Geometry, res: Long, how: String): Seq[Long] =
+    BngIndexIdsExpr(Literal(Wkb.write(g)), res, how).eval()
+      .asInstanceOf[GenericArrayData].toLongArray().toSeq
+
   /** The JTS refine alone, with no single-cell fast path. */
   private def jtsRefs(g: Geometry, res: Long, how: String): Seq[String] = {
     val env = g.getEnvelopeInternal
@@ -122,7 +127,10 @@ class BngSpec extends SparkSpec {
       else g
     }
     def pt(x: Double, y: Double) = new Coordinate(x, y)
-    val hand: Seq[Geometry] = Seq(
+    // two boxes whose only contact is the grid line E 410000
+    val west = Wkb.box(395000, 400000, 410000, 405000)
+    val east = Wkb.box(410000, 400000, 420000, 405000)
+    val hand: Seq[Geometry] = Seq(west, east,
       // touching its cell's min edges from inside
       Wkb.box(530000, 180000, 530500, 180500), ring((530000, 180000), (531000, 180200), (530300, 181000)),
       // max edge exactly on a grid line
@@ -140,6 +148,10 @@ class BngSpec extends SparkSpec {
     val lineOnGrid = hand.last
     assert(refs(lineOnGrid, 10000, "interior").isEmpty)
     assert(refs(lineOnGrid, 10000, "intersects") == Seq("TQ48")) // half-open candidates
+    // a point on the shared line floor-maps to a cell both boxes keep as a
+    // join candidate, so the pair still meets in the cell equi-join
+    val shared = ids(west, 10000, "intersects").intersect(ids(east, 10000, "intersects"))
+    assert(shared.contains(Bng.cellId(410000, 402500, 10000)), shared)
     var single = 0
     val cases = hand.map(g => (g, 10000L)) ++ (0 until 5000).map { i =>
       val res = if (i % 2 == 0) 10000L else 1000L
@@ -151,9 +163,7 @@ class BngSpec extends SparkSpec {
         single += 1
       Seq("intersects", "interior").foreach { how =>
         assert(refs(g, res, how) == jtsRefs(g, res, how), s"$how at $res: $g")
-        val ids = BngIndexIdsExpr(Literal(Wkb.write(g)), res, how).eval()
-          .asInstanceOf[GenericArrayData].toLongArray().toSeq
-        assert(ids == refs(g, res, how).map { ref =>
+        assert(ids(g, res, how) == refs(g, res, how).map { ref =>
           val (e, n, r) = Bng.parse(ref)
           Bng.cellId(e.toDouble, n.toDouble, r)
         }, s"ids, $how at $res")
@@ -174,9 +184,7 @@ class BngSpec extends SparkSpec {
       val expected = jtsRefs(fixed, 10000, how)
       assert(expected == Seq("TQ38", "TQ48"), how)
       assert(refs(g, 10000, how) == expected, how)
-      val ids = BngIndexIdsExpr(Literal(Wkb.write(g)), 10000, how).eval()
-        .asInstanceOf[GenericArrayData].toLongArray().toSeq
-      assert(ids == expected.map { ref =>
+      assert(ids(g, 10000, how) == expected.map { ref =>
         val (e, n, r) = Bng.parse(ref)
         Bng.cellId(e.toDouble, n.toDouble, r)
       }, how)

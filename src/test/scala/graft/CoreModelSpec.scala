@@ -63,7 +63,7 @@ class CoreModelSpec extends SparkSpec {
   }
 
   test("sidecar JSON metadata fallback (reference _dataframe.py:174-183)") {
-    val p = java.nio.file.Files.createTempFile("meta", ".json")
+    val p = java.nio.file.Paths.get(tempDir("meta"), "meta.json")
     java.nio.file.Files.writeString(p,
       """{"title": "From JSON", "keyword": ["a", "b"], "lineage": "j"}""")
     val m = Metadata.fromJsonFile(p.toString)
@@ -86,7 +86,7 @@ class CoreModelSpec extends SparkSpec {
 
   test("LayerWrapper end-to-end: read csv -> join -> filter -> categorize -> index, lineage tracks") {
     // reproduce the reference pipeline-test shape (test_pipeline.py:92-105)
-    val dir = java.nio.file.Files.createTempDirectory("layer").toString
+    val dir = tempDir("layer")
     Seq(("A", "grassland"), ("B", "woodland"), ("C", "wetland"), ("D", "farmland"))
       .toDF("category", "land_cover")
       .write.option("header", "true").mode("overwrite").csv(s"$dir/lookup.csv")

@@ -46,7 +46,7 @@ class E2ePipelineSpec extends SparkSpec {
       Map("grassland" -> 0d, "wetland" -> 1d, "woodland" -> 2d))
     assert(out.data.count() == 91 - 22) // 22 squares are D/farmland
 
-    val path = java.nio.file.Files.createTempDirectory("e2e").toString
+    val path = tempDir("e2e")
     out.toTileStore(path, Seq("land_cover"),
       cellSize = 10000, tileSize = 100000, overwrite = true)
 

@@ -81,20 +81,6 @@ class GeoExprSpec extends SparkSpec {
     val pp = GenerateUnsafeProjection.generate(Seq(par), false)
     val id8 = graft.index.H3.cellId(51.5, -0.1, 8)
     assert(pp(InternalRow(id8)).getLong(0) == graft.index.H3.parent(id8, 7))
-
-    val multi = graft.index.SphericalCellsMulti(
-      BoundReference(0, DoubleType, nullable = false),
-      BoundReference(1, DoubleType, nullable = false), 7, 12, 12)
-    val mp = GenerateUnsafeProjection.generate(Seq(multi), false)
-    val row = mp(InternalRow(530000.0, 180000.0))
-    val st = row.getStruct(0, 2)
-    val ids = st.getArray(0).toLongArray()
-    assert(ids.length == 6)
-    // finest-first chain equals the scalar encoders + parent walk
-    val m = graft.index.Transform.bngToWgs84Memo(530000.0, 180000.0)
-    assert(ids(0) == graft.index.H3.cellId(m(2), m(3), 12))
-    assert(ids(5) == graft.index.H3.parent(ids(4), 7))
-    assert(st.getLong(1) == graft.index.S2.cellId(m(2), m(3), 12))
   }
 
   test("shared point testers answer like JTS from 4 threads; the table stays bounded") {

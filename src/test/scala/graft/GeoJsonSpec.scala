@@ -16,7 +16,7 @@ class GeoJsonSpec extends SparkSpec {
       (1L, "alpha", 2.25, true, 1000.0, 2000.0),
       (2L, "be\"ta\n", -0.75, false, 3000.0, 4000.0)
     ).toDF("key", "name", "score", "flag", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("gj").toString
+    val dir = tempDir("gj")
     GeoJson.write(df, s"$dir/t.geojson")
     val back = GeoJson.read(spark, s"$dir/t.geojson")
     assert(back.schema.fieldNames.toSeq ==
@@ -48,7 +48,7 @@ class GeoJsonSpec extends SparkSpec {
         |      [[[5, 5], [7, 5], [7, 7], [5, 7], [5, 5]]]]}},
         |  {"type": "Feature", "properties": {"a": 7}, "geometry": null}
         |]}""".stripMargin
-    val dir = java.nio.file.Files.createTempDirectory("gjh").toString
+    val dir = tempDir("gjh")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/h.geojson"), doc)
     val back = GeoJson.read(spark, s"$dir/h.geojson").orderBy("fid").collect()
@@ -74,7 +74,7 @@ class GeoJsonSpec extends SparkSpec {
 
   test("from_files dispatches .geojson") {
     val df = Seq((7L, 100.0, 200.0)).toDF("key", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("gjf").toString
+    val dir = tempDir("gjf")
     GeoJson.write(df, s"$dir/layer.geojson")
     val layer = LayerWrapper.fromFiles(spark, s"$dir/layer.geojson")
     assert(layer.name == "layer")

@@ -21,7 +21,7 @@ class GpkgSpec extends SparkSpec {
       (2L, "beta", -1.25, 3000.0, 4000.0),
       (3L, "gamma", 99.0, 5000.0, 6000.0)
     ).toDF("key", "name", "score", "x", "y")
-    val path = java.nio.file.Files.createTempDirectory("gpkg").toString + "/t.gpkg"
+    val path = tempDir("gpkg") + "/t.gpkg"
     Gpkg.write(df, path)
     val back = Gpkg.read(spark, path)
     assert(back.schema.fieldNames.toSeq ==
@@ -62,7 +62,7 @@ class GpkgSpec extends SparkSpec {
     val df = (0 until 500).map { i =>
       (i.toLong, if (i == 250) big else s"n$i", i * 10.0, i * 20.0)
     }.toDF("key", "name", "x", "y")
-    val path = java.nio.file.Files.createTempDirectory("gpkgbig").toString + "/b.gpkg"
+    val path = tempDir("gpkgbig") + "/b.gpkg"
     Gpkg.write(df, path)
     val back = Gpkg.read(spark, path).orderBy("fid").collect()
     assert(back.length == 500)
@@ -83,7 +83,7 @@ class GpkgSpec extends SparkSpec {
 
   test("from_files dispatches .gpkg through the SQLite reader") {
     val df = Seq((7L, "pt", 100.0, 200.0)).toDF("key", "name", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("gpkgf").toString
+    val dir = tempDir("gpkgf")
     val path = s"$dir/layer.gpkg"
     Gpkg.write(df, path)
     val layer = LayerWrapper.fromFiles(spark, path)

@@ -82,95 +82,6 @@ class H3S2Spec extends AnyFunSuite {
     assert(faces == Seq(2), s"canvas spans faces $faces")
   }
 
-  test("S2 envelope cover contains the cell of every interior point") {
-    val (minx, miny, maxx, maxy) = (420000.0, 510000.0, 470000.0, 560000.0)
-    val cover = S2.coverEnvelopeBng(minx, miny, maxx, maxy, 10).toSet
-    assert(cover.nonEmpty && cover.size < 500)
-    (0 until 300).foreach { k =>
-      val h = graft.input.WebTable.splitmix64(k.toLong * 131L)
-      val x = minx + java.lang.Long.remainderUnsigned(h, 50000L)
-      val y = miny + java.lang.Long.remainderUnsigned(h >>> 11, 50000L)
-      val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-      val cell = S2.cellId(lat, lng, 10)
-      assert(cover.contains(cell), s"point ($x,$y) cell not covered")
-    }
-  }
-
-  test("H3 envelope cover contains the cell of every interior point") {
-    val (minx, miny, maxx, maxy) = (420000.0, 510000.0, 460000.0, 550000.0)
-    val cover = H3.coverEnvelopeBng(minx, miny, maxx, maxy, 8).toSet
-    assert(cover.nonEmpty && cover.size < 3000, s"cover size ${cover.size}")
-    (0 until 300).foreach { k =>
-      val h = graft.input.WebTable.splitmix64(k.toLong * 977L)
-      val x = minx + java.lang.Long.remainderUnsigned(h, 40000L)
-      val y = miny + java.lang.Long.remainderUnsigned(h >>> 11, 40000L)
-      val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-      assert(cover.contains(H3.cellId(lat, lng, 8)), s"point ($x,$y) not covered")
-    }
-  }
-
-  test("S2 cover containment holds at fine levels / large envelopes") {
-    // level 16 (cell ~150 m) over a 40 km box: the old fixed 3x3 sample's
-    // curvature residue exceeded one cell here.
-    for ((size, level, maxCover) <- Seq((40000.0, 16, 200000), (500.0, 20, 5000))) {
-      val (minx, miny) = (420000.0, 510000.0)
-      val cover = S2.coverEnvelopeBng(minx, miny, minx + size, miny + size, level).toSet
-      assert(cover.nonEmpty && cover.size < maxCover, s"level $level size ${cover.size}")
-      (0 until 500).foreach { k =>
-        val h = graft.input.WebTable.splitmix64(k.toLong * 131L + level)
-        val x = minx + java.lang.Long.remainderUnsigned(h, size.toLong)
-        val y = miny + java.lang.Long.remainderUnsigned(h >>> 11, size.toLong)
-        val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-        assert(cover.contains(S2.cellId(lat, lng, level)),
-          s"level $level point ($x,$y) not covered")
-      }
-    }
-  }
-
-  test("H3 cover containment holds at the finest supported resolutions") {
-    // res 12 (edge ~30 m) over a 4 km box exercises the capped-sampling +
-    // widened-disk path; res 15 over a 60 m box the pure half-edge path.
-    for ((size, res) <- Seq((4000.0, 12), (60.0, 15))) {
-      val (minx, miny) = (420000.0, 510000.0)
-      val cover = H3.coverEnvelopeBng(minx, miny, minx + size, miny + size, res).toSet
-      assert(cover.nonEmpty, s"res $res empty cover")
-      (0 until 500).foreach { k =>
-        val h = graft.input.WebTable.splitmix64(k.toLong * 977L + res)
-        val x = minx + java.lang.Long.remainderUnsigned(h, math.max(1L, size.toLong))
-        val y = miny + java.lang.Long.remainderUnsigned(h >>> 11, math.max(1L, size.toLong))
-        val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-        assert(cover.contains(H3.cellId(lat, lng, res)),
-          s"res $res point ($x,$y) not covered")
-      }
-    }
-  }
-
-  test("S2 geometry cover: contains every interior cell, prunes the envelope") {
-    val wkt = "POLYGON ((420000 510000, 422000 510000, 482000 568000, 480000 570000, 420000 510000))"
-    val g = graft.geo.Wkb.readWkt(wkt)
-    val level = 13
-    val envI = g.getEnvelopeInternal
-    val envCover = S2.coverEnvelopeBng(envI.getMinX, envI.getMinY,
-      envI.getMaxX, envI.getMaxY, level).toSet
-    val geomCover = S2.coverGeometryBng(g, level).toSet
-    assert(geomCover.subsetOf(envCover))
-    assert(geomCover.size * 3 < envCover.size,
-      s"expected >3x pruning, got ${envCover.size} -> ${geomCover.size}")
-    var found = 0
-    (0 until 3000).foreach { k =>
-      val h = graft.input.WebTable.splitmix64(k.toLong * 557L)
-      val x = 420000.0 + java.lang.Long.remainderUnsigned(h, 62000L)
-      val y = 510000.0 + java.lang.Long.remainderUnsigned(h >>> 11, 60000L)
-      if (g.covers(graft.geo.Wkb.point(x, y))) {
-        found += 1
-        val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-        assert(geomCover.contains(S2.cellId(lat, lng, level)),
-          s"point ($x,$y) not covered")
-      }
-    }
-    assert(found > 50)
-  }
-
   test("lattice fast transform matches the exact chain to < 2e-9 deg on-canvas, exactly off-canvas") {
     val fast = new Array[Double](2); val exact = new Array[Double](2)
     var maxErr = 0.0
@@ -203,36 +114,6 @@ class H3S2Spec extends AnyFunSuite {
       assert(math.abs(e2 - e) < 1e-3 && math.abs(n2 - n) < 1e-3,
         s"($e,$n) -> ($e2,$n2)")
     }
-  }
-
-  test("H3 geometry cover: contains every interior cell, prunes the envelope") {
-    // Diagonal corridor (thin rotated quad) across 60 km: the envelope
-    // cover pays the full bounding square; the geometry cover must keep
-    // every point's cell while dropping most of it.
-    val wkt = "POLYGON ((420000 510000, 422000 510000, 482000 568000, 480000 570000, 420000 510000))"
-    val g = graft.geo.Wkb.readWkt(wkt)
-    val res = 9
-    val envI = g.getEnvelopeInternal
-    val envCover = H3.coverEnvelopeBng(envI.getMinX, envI.getMinY,
-      envI.getMaxX, envI.getMaxY, res).toSet
-    val geomCover = H3.coverGeometryBng(g, res).toSet
-    assert(geomCover.subsetOf(envCover))
-    assert(geomCover.size * 3 < envCover.size,
-      s"expected >3x pruning, got ${envCover.size} -> ${geomCover.size}")
-    // containment: random points inside the corridor
-    var found = 0
-    (0 until 3000).foreach { k =>
-      val h = graft.input.WebTable.splitmix64(k.toLong * 919L)
-      val x = 420000.0 + java.lang.Long.remainderUnsigned(h, 62000L)
-      val y = 510000.0 + java.lang.Long.remainderUnsigned(h >>> 11, 60000L)
-      if (g.covers(graft.geo.Wkb.point(x, y))) {
-        found += 1
-        val (lat, lng) = Transform.bngToWgs84Deg(x, y)
-        assert(geomCover.contains(H3.cellId(lat, lng, res)),
-          s"point ($x,$y) not covered")
-      }
-    }
-    assert(found > 50, s"fixture degenerate: only $found interior samples")
   }
 
   // ---------------- H3-style ----------------

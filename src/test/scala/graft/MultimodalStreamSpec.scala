@@ -32,7 +32,7 @@ class MultimodalStreamSpec extends SparkSpec {
 
   test("file stream processes incrementally arriving batches") {
     import org.apache.spark.sql.streaming.Trigger
-    val dir = java.nio.file.Files.createTempDirectory("increm").toString
+    val dir = tempDir("increm")
     val batch1 = spark.read.parquet(s"$sf0/events.parquet").limit(400)
     batch1.coalesce(1).write.mode("append").parquet(dir)
     val schema = spark.read.parquet(dir).schema
@@ -81,7 +81,7 @@ class MultimodalStreamSpec extends SparkSpec {
     // state is evicted before its duplicate arrives, so A is (correctly,
     // by the bounded-state contract) emitted twice — where an unbounded
     // DISTINCT would emit it once.
-    val dir = java.nio.file.Files.createTempDirectory("dedup-evict").toString
+    val dir = tempDir("dedup-evict")
     Seq(
       ("A", java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
       ("B", java.sql.Timestamp.valueOf("2024-01-02 00:00:00")),
@@ -97,7 +97,7 @@ class MultimodalStreamSpec extends SparkSpec {
   }
 
   test("stream -> versioned table: one snapshot per micro-batch, incremental reads the delta") {
-    val root = java.nio.file.Files.createTempDirectory("stream-vt").toString + "/t"
+    val root = tempDir("stream-vt") + "/t"
     val vt = graft.streaming.EventStream.streamToVersionedTable(spark,
       s"$sf0/events.parquet", "ts", root, nFiles = 4,
       queryName = s"t_ingest_${System.nanoTime()}")

@@ -77,12 +77,4 @@ class OpsSpec extends SparkSpec {
     // values preserved
     assert(out.head().getByte(0) == 1.toByte && out.head().getLong(3) == 3000000000L)
   }
-
-  test("salted repartition preserves row set") {
-    val rows = (0 until 2000).map(i => (if (i % 3 == 0) "hot" else s"c$i", i.toLong))
-    val df = rows.toDF("cell", "id")
-    val salted = Salting.saltedRepartition(df, "cell", "id", targetRowsPerTask = 50)
-      .drop("__salt__")
-    assertSameRows(salted, df)
-  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Catalogue queries against their `oracleSql`, run in in-process DuckDB
   * over the same sf0.001 parquet tables, compared the way `Verify`'s
   * parquet dump is checked against DuckDB: the Spark result is written to
@@ -66,7 +64,7 @@ class OracleSpec extends SparkSpec {
 
   Queries.foreach { name =>
     test(s"$name matches its oracleSql in DuckDB") {
-      val out = Files.createTempDirectory(s"oracle-$name").toString
+      val out = tempDir(s"oracle-$name")
       SparkEntry.queries(name)(spark, sf0).coalesce(1).write.mode("overwrite")
         .parquet(s"$out/$name")
       val (gotCols, got) = rows(s"SELECT * FROM read_parquet('$out/$name/*.parquet')")

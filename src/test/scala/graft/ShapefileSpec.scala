@@ -20,7 +20,7 @@ class ShapefileSpec extends SparkSpec {
       (2L, "beta", -0.75, false, 3000.0, 4000.0),
       (3L, "gamma", 12.5, true, 5000.0, 6000.0)
     ).toDF("key", "name", "score", "flag", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("shp").toString
+    val dir = tempDir("shp")
     Shapefile.write(df, s"$dir/t.shp")
     val back = Shapefile.read(spark, s"$dir/t.shp")
     assert(back.schema.fieldNames.toSeq ==
@@ -41,7 +41,7 @@ class ShapefileSpec extends SparkSpec {
 
   test("shx index matches shp record offsets") {
     val df = Seq((1L, 10.0, 20.0), (2L, 30.0, 40.0)).toDF("k", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("shpx").toString
+    val dir = tempDir("shpx")
     Shapefile.write(df, s"$dir/t.shp")
     val shx = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/t.shx"))
@@ -89,7 +89,7 @@ class ShapefileSpec extends SparkSpec {
     // polygon: CW outer 10x10 square, CCW 2x2 hole
     val outer = Seq((0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0), (0.0, 0.0))
     val hole = Seq((4.0, 4.0), (6.0, 4.0), (6.0, 6.0), (4.0, 6.0), (4.0, 4.0))
-    val dir = java.nio.file.Files.createTempDirectory("shpp").toString
+    val dir = tempDir("shpp")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/p.shp"),
       shpFile(5, poly(5, Seq(outer, hole))))
     val pg = Wkb.read(Shapefile.read(spark, s"$dir/p.shp")
@@ -108,7 +108,7 @@ class ShapefileSpec extends SparkSpec {
 
   test("from_files dispatches .shp and null/deleted dbf records handled") {
     val df = Seq((7L, "pt", 100.0, 200.0)).toDF("key", "name", "x", "y")
-    val dir = java.nio.file.Files.createTempDirectory("shpf").toString
+    val dir = tempDir("shpf")
     Shapefile.write(df, s"$dir/layer.shp")
     val layer = LayerWrapper.fromFiles(spark, s"$dir/layer.shp")
     assert(layer.name == "layer")

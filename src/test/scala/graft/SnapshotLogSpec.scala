@@ -1,12 +1,11 @@
 package graft
 
 import graft.input.{PartitionMetric, SnapshotLog}
-import org.scalatest.funsuite.AnyFunSuite
 
-class SnapshotLogSpec extends AnyFunSuite {
+class SnapshotLogSpec extends TempDirs {
 
   test("commit / head / resume round-trip") {
-    val dir = java.nio.file.Files.createTempDirectory("snaplog").toString
+    val dir = tempDir("snaplog")
     val log = new SnapshotLog(dir)
     assert(log.head.isEmpty)
 
@@ -32,7 +31,7 @@ class SnapshotLogSpec extends AnyFunSuite {
       .master("local[4]").config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "4").getOrCreate()
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("vtable").toString
+    val dir = tempDir("vtable")
     val t = new graft.input.VersionedTable(dir)
     assert(t.headId.isEmpty)
 
@@ -69,7 +68,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]").config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "4").getOrCreate()
-    val dir = java.nio.file.Files.createTempDirectory("pipeck").toString
+    val dir = tempDir("pipeck")
     val out1 = graft.run.Pipeline.runCheckpointed(spark, 300, dir)
     val n1 = out1.count()
     val log = new SnapshotLog(dir)

@@ -6,25 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path}
 
-/** Shared local session for all suites (getOrCreate reuses one JVM-wide
-  * session, so suites don't pay startup each).
+/** Temp directories for a suite: each one [[tempDir]] makes is deleted
+  * with everything in it when the running test ends (pass or fail).
   */
-trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  def sf0: String = "/root/testdata/sf0.001"
-
+trait TempDirs extends AnyFunSuite {
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
 
-  /** A fresh temp directory, deleted with everything in it when the
-    * running test ends (pass or fail).
-    */
+  /** A fresh temp directory, deleted when the running test ends. */
   def tempDir(prefix: String): String = {
     val dir = Files.createTempDirectory(prefix)
     tempDirs += dir
@@ -41,6 +29,21 @@ trait SparkSpec extends AnyFunSuite {
       }
       tempDirs.clear()
     }
+}
+
+/** Shared local session for all suites (getOrCreate reuses one JVM-wide
+  * session, so suites don't pay startup each).
+  */
+trait SparkSpec extends TempDirs {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .appName("graft-test")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  def sf0: String = "/root/testdata/sf0.001"
 
   /** Row-set equality helper (schema-name + sorted-row comparison) — the
     * chispa `assert_df_equality` equivalent (SURVEY.md §5).

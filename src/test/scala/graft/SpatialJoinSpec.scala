@@ -78,24 +78,6 @@ class SpatialJoinSpec extends SparkSpec {
     }
   }
 
-  test("geomJoin polygons x polygons intersects matches oracle incl. multi-cell dedupe") {
-    val a = tris.take(15).toDF("a_id", "wkt")
-      .withColumn("ga", st_geomfromtext(col("wkt"))).drop("wkt")
-    val b = tris.drop(15).toDF("b_id", "wkt")
-      .withColumn("gb", st_geomfromtext(col("wkt"))).drop("wkt")
-    val got = SpatialJoin.geomJoin(a, "ga", "a_id", b, "gb", "b_id",
-        resolution = 100000L, predicate = "intersects", broadcastRight = true)
-      .select("a_id", "b_id").as[(Long, Long)].collect()
-    assert(got.length == got.toSet.size, "dedupe failed: duplicate pairs")
-    val polys = tris.map { case (j, wkt) => j -> Wkb.readWkt(wkt) }.toMap
-    val expected = (for {
-      (aid, _) <- tris.take(15)
-      (bid, _) <- tris.drop(15)
-      if polys(aid).intersects(polys(bid))
-    } yield (aid, bid)).toSet
-    assert(got.toSet == expected)
-  }
-
   test("non-broadcast (sort-merge) spatial join path matches broadcast path") {
     val ptsDf = pts.toDF("pid", "x", "y")
     val polyDf = tris.toDF("poly_id", "wkt")
@@ -107,23 +89,6 @@ class SpatialJoinSpec extends SparkSpec {
         resolution = 10000L, broadcastPolys = false, predicate = "covers")
       .select("pid", "poly_id").as[(Long, Long)].collect().toSet
     assert(viaShuffle == viaBroadcast)
-  }
-
-  test("H3- and S2-keyed spatial joins return the same pairs as the BNG join") {
-    val ptsDf = pts.toDF("pid", "x", "y")
-    val polyDf = tris.toDF("poly_id", "wkt")
-      .withColumn("geometry", st_geomfromtext(col("wkt"))).drop("wkt")
-    val viaBng = SpatialJoin.pointInPolygon(ptsDf, "x", "y", polyDf, "geometry",
-        resolution = 10000L, predicate = "covers")
-      .select("pid", "poly_id").as[(Long, Long)].collect().toSet
-    val viaS2 = SpatialJoin.pointInPolygonSpherical(ptsDf, "x", "y",
-        polyDf, "geometry", system = "s2", res = 11)
-      .select("pid", "poly_id").as[(Long, Long)].collect().toSet
-    val viaH3 = SpatialJoin.pointInPolygonSpherical(ptsDf, "x", "y",
-        polyDf, "geometry", system = "h3", res = 7)
-      .select("pid", "poly_id").as[(Long, Long)].collect().toSet
-    assert(viaS2 == viaBng)
-    assert(viaH3 == viaBng)
   }
 
   test("spatial join result invariant under input partitioning (north rule)") {
@@ -209,18 +174,6 @@ class SpatialJoinSpec extends SparkSpec {
         resolution = 10000L, broadcastPolys = true, predicate = "covers")
       .select("pid").as[Long].collect().toSet
     assert(got == Set(1L, 2L, 3L))
-  }
-
-  test("geometries whose only contact is a grid line are joined (geomJoin)") {
-    val left = Seq((1L, Wkb.write(Wkb.box(395000, 400000, 410000, 405000))))
-      .toDF("lid", "geometry")
-    val right = Seq((2L, Wkb.write(Wkb.box(410000, 400000, 420000, 405000))))
-      .toDF("rid", "geometry")
-    val got = SpatialJoin.geomJoin(left, "geometry", "lid",
-        right.withColumnRenamed("geometry", "rgeom"), "rgeom", "rid",
-        resolution = 10000L, predicate = "intersects", broadcastRight = true)
-      .select("lid", "rid").as[(Long, Long)].collect().toSet
-    assert(got == Set((1L, 2L)))
   }
 
   test("spherical radius join is seam-safe: antimeridian, poles, and global spread") {

@@ -16,7 +16,7 @@ class TiffSpec extends SparkSpec {
   test("uint8 DEFLATE multi-strip round-trip with georeferencing") {
     val (w, h) = (50, 40)
     val data = grid(w, h)((r, c) => ((r * 31 + c * 7) % 251).toDouble)
-    val dir = java.nio.file.Files.createTempDirectory("tif").toString
+    val dir = tempDir("tif")
     Tiff.write(s"$dir/g.tif", w, h, data, "uint8", cellSize = 10.0,
       deflate = true, rowsPerStrip = 16) // 3 strips, last partial
     val (inf, back) = Tiff.readPixels(s"$dir/g.tif")
@@ -33,7 +33,7 @@ class TiffSpec extends SparkSpec {
 
   test("float and signed-int dtypes round-trip exactly") {
     val (w, h) = (7, 5)
-    val dir = java.nio.file.Files.createTempDirectory("tifd").toString
+    val dir = tempDir("tifd")
     Seq(
       ("float64", grid(w, h)((r, c) => r * 0.5 - c * 0.25)),
       ("float32", grid(w, h)((r, c) => (r - c).toDouble / 4.0)),
@@ -65,7 +65,7 @@ class TiffSpec extends SparkSpec {
     }
     b.putInt(10 + entries.length * 12, 0)
     b.put(122, 200.toByte); b.put(123, 5.toByte)
-    val dir = java.nio.file.Files.createTempDirectory("tifbe").toString
+    val dir = tempDir("tifbe")
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/be.tif"), b.array())
     val (inf, px) = Tiff.readPixels(s"$dir/be.tif")
     assert(!inf.littleEndian && inf.width == 2 && inf.height == 1)
@@ -75,7 +75,7 @@ class TiffSpec extends SparkSpec {
   test("distributed cells drop nodata and match the closed form") {
     val (w, h) = (30, 20)
     val data = grid(w, h)((r, c) => ((r * 31 + c * 7) % 11).toDouble)
-    val dir = java.nio.file.Files.createTempDirectory("tifc").toString
+    val dir = tempDir("tifc")
     Tiff.write(s"$dir/n.tif", w, h, data, "uint8", rowsPerStrip = 8)
     val got = Tiff.cells(spark, s"$dir/n.tif", nodata = 0.0).collect()
     val expected = (for {
@@ -87,7 +87,7 @@ class TiffSpec extends SparkSpec {
   }
 
   test("unsupported layouts are rejected with clear errors") {
-    val dir = java.nio.file.Files.createTempDirectory("tifx").toString
+    val dir = tempDir("tifx")
     val p = s"$dir/bad.tif"
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       "notatiff".getBytes("US-ASCII"))

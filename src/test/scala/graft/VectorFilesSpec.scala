@@ -15,7 +15,7 @@ class VectorFilesSpec extends SparkSpec {
       .toDF("key", "name", "score", "x", "y")
 
   test("mixed shp/geojson/gpkg directory unions into one aligned DataFrame") {
-    val dir = java.nio.file.Files.createTempDirectory("vf").toString
+    val dir = tempDir("vf")
     Shapefile.write(feats(0 until 5), s"$dir/a.shp")
     GeoJson.write(feats(5 until 9), s"$dir/b.geojson")
     Gpkg.write(feats(9 until 12), s"$dir/c.gpkg")
@@ -36,7 +36,7 @@ class VectorFilesSpec extends SparkSpec {
   }
 
   test("suffix and pattern filters select files like the reference kwargs") {
-    val dir = java.nio.file.Files.createTempDirectory("vfs").toString
+    val dir = tempDir("vfs")
     Shapefile.write(feats(0 until 3), s"$dir/keep-1.shp")
     Shapefile.write(feats(3 until 5), s"$dir/keep-2.shp")
     GeoJson.write(feats(5 until 7), s"$dir/other.geojson")
@@ -46,7 +46,7 @@ class VectorFilesSpec extends SparkSpec {
   }
 
   test("coerce_to_schema: missing columns null, extras dropped, long widens") {
-    val dir = java.nio.file.Files.createTempDirectory("vfc").toString
+    val dir = tempDir("vfc")
     // head file (sorted first) defines schema: key long, name, score double
     Shapefile.write(feats(0 until 2), s"$dir/a.shp")
     // second file: no score, extra flag, and key stays long
@@ -70,7 +70,7 @@ class VectorFilesSpec extends SparkSpec {
   }
 
   test("empty directory errors clearly") {
-    val dir = java.nio.file.Files.createTempDirectory("vfe").toString
+    val dir = tempDir("vfe")
     intercept[IllegalArgumentException](VectorFiles.read(spark, dir))
   }
 }

@@ -19,7 +19,7 @@ class XlsSpec extends SparkSpec {
       (2L, "beta", -2.25, false),
       (3L, "gamma & <co>", 0.0, true)
     ).toDF("id", "label", "score", "flag")
-    val path = java.nio.file.Files.createTempDirectory("xls").toString + "/t.xls"
+    val path = tempDir("xls") + "/t.xls"
     Xls.write(df, path)
     // small workbook -> stream < 4096 B -> must land in the CFB mini
     // stream so the reader's miniFAT path is the one under test
@@ -46,7 +46,7 @@ class XlsSpec extends SparkSpec {
     val df = (0 until 600).map { i =>
       (i.toLong, s"document-$i-" + ("x" * (20 + i % 17)) + s"-tail$i")
     }.toDF("id", "text")
-    val path = java.nio.file.Files.createTempDirectory("xlsbig").toString + "/big.xls"
+    val path = tempDir("xlsbig") + "/big.xls"
     Xls.write(df, path)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val stream = Xls.workbookStream(bytes)
@@ -80,7 +80,7 @@ class XlsSpec extends SparkSpec {
     val filler = "f" * 8197
     val target = "Ābc" // char >= 256 -> uncompressed (fHighByte=1)
     val df = Seq((1L, filler), (2L, target)).toDF("id", "text")
-    val path = java.nio.file.Files.createTempDirectory("xlsb").toString + "/b.xls"
+    val path = tempDir("xlsb") + "/b.xls"
     Xls.write(df, path)
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val stream = Xls.workbookStream(bytes)
@@ -108,7 +108,7 @@ class XlsSpec extends SparkSpec {
       (11L, 21L, Some(java.sql.Timestamp.valueOf("2001-01-31 12:30:00")), None),
       (12L, 22L, None, Some("c"))
     ).toDF("k1", "k2", "ts", "s")
-    val path = java.nio.file.Files.createTempDirectory("xlsd").toString + "/d.xls"
+    val path = tempDir("xlsd") + "/d.xls"
     Xls.write(df, path)
     val back = Xls.read(spark, path).orderBy("k1").collect()
     // consecutive integer columns rode a MULRK record; dates come back
@@ -136,7 +136,7 @@ class XlsSpec extends SparkSpec {
 
   test("from_files dispatches .xls through the BIFF8 reader") {
     val df = Seq((1L, "x"), (2L, "y")).toDF("id", "v")
-    val dir = java.nio.file.Files.createTempDirectory("xlsf").toString
+    val dir = tempDir("xlsf")
     val path = s"$dir/t.xls"
     Xls.write(df, path)
     val layer = LayerWrapper.fromFiles(spark, path)

@@ -19,7 +19,7 @@ class XlsxSpec extends SparkSpec {
       (2L, "beta", -2.25, false),
       (3L, "gamma & <co>", 0.0, true)
     ).toDF("id", "label", "score", "flag")
-    val path = java.nio.file.Files.createTempDirectory("xlsx").toString + "/t.xlsx"
+    val path = tempDir("xlsx") + "/t.xlsx"
     Xlsx.write(df, path)
     val back = Xlsx.read(spark, path)
     assert(back.schema == StructType(Seq(
@@ -38,7 +38,7 @@ class XlsxSpec extends SparkSpec {
   test("xlsx shared strings, gap cells, and rich-text runs parse") {
     // Hand-built workbook exercising t="s" cells, a skipped cell (B3
     // absent -> null), and a rich-text <si> split across two <t> runs.
-    val dir = java.nio.file.Files.createTempDirectory("xlsx2").toString
+    val dir = tempDir("xlsx2")
     val path = s"$dir/s.xlsx"
     val shared =
       """<?xml version="1.0"?>
@@ -70,7 +70,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("ods fixture with repeated and typed cells parses") {
-    val dir = java.nio.file.Files.createTempDirectory("ods").toString
+    val dir = tempDir("ods")
     val path = s"$dir/t.ods"
     val content =
       """<?xml version="1.0"?>
@@ -102,7 +102,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("xlsx error cells and unparseable values surface as null, not ingest failure") {
-    val dir = java.nio.file.Files.createTempDirectory("xlsx-err").toString
+    val dir = tempDir("xlsx-err")
     val path = s"$dir/e.xlsx"
     val sheet =
       """<?xml version="1.0"?>
@@ -125,7 +125,7 @@ class XlsxSpec extends SparkSpec {
   test("ods trailing repeated empty fillers don't widen the inferred table") {
     // Writers pad row ends with number-columns-repeated empty cells (up
     // to 16384); those must not become all-null columns.
-    val dir = java.nio.file.Files.createTempDirectory("ods-fill").toString
+    val dir = tempDir("ods-fill")
     val path = s"$dir/f.ods"
     val content =
       """<?xml version="1.0"?>
@@ -158,7 +158,7 @@ class XlsxSpec extends SparkSpec {
 
   test("from_files dispatches .xlsx and carries lineage") {
     val df = Seq((10L, "x"), (20L, "y")).toDF("k", "v")
-    val dir = java.nio.file.Files.createTempDirectory("xlsx3").toString
+    val dir = tempDir("xlsx3")
     Xlsx.write(df, s"$dir/table.xlsx")
     val lw = LayerWrapper.fromFiles(spark, s"$dir/table.xlsx")
     assert(lw.name == "table")
@@ -167,7 +167,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("xlsx date-styled serials surface as ISO strings (1900 leap bug handled)") {
-    val dir = java.nio.file.Files.createTempDirectory("xlsxd").toString
+    val dir = tempDir("xlsxd")
     val path = s"$dir/d.xlsx"
     // styles: xf 0 = general, xf 1 = builtin date (14), xf 2 = custom
     // date code (yyyy-mm-dd), xf 3 = custom NON-date (quoted "dy" text)
@@ -226,7 +226,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("ods typed date and time cells pass through as ISO strings") {
-    val dir = java.nio.file.Files.createTempDirectory("odsd").toString
+    val dir = tempDir("odsd")
     val path = s"$dir/d.ods"
     val content =
       """<?xml version="1.0"?>

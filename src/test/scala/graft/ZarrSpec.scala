@@ -59,12 +59,12 @@ class ZarrSpec extends SparkSpec {
       val miny = (12 - r) * 100000.0
       (i.toLong, Wkb.write(Wkb.box(minx, miny, minx + 100000, miny + 100000)))
     }
-    val store = Files.createTempDirectory("zarr-src").toString
+    val store = tempDir("zarr-src")
     RasterPipeline.toTileStore(rows.toDF("val", "geometry"), "geometry",
       Seq("val"), store, cellSize = 100000, tileSize = 100000,
       overwrite = true).count()
 
-    val out = Files.createTempDirectory("zarr-out").resolve("g").toString
+    val out = tempDir("zarr-out") + "/g"
     Zarr.export(spark, store, out, level = 1)
 
     // group skeleton
@@ -123,11 +123,11 @@ class ZarrSpec extends SparkSpec {
       (1L, Wkb.write(Wkb.box(0, 1250000, 50000, 1300000))), // top-left cell
       (2L, Wkb.write(Wkb.box(50000, 1200000, 100000, 1250000))) // bottom-right
     )
-    val store = Files.createTempDirectory("zarr-src2").toString
+    val store = tempDir("zarr-src2")
     RasterPipeline.toTileStore(rows.toDF("val", "geometry"), "geometry",
       Seq("val"), store, cellSize = 50000, tileSize = 100000,
       overwrite = true).count()
-    val out = Files.createTempDirectory("zarr-out2").resolve("g").toString
+    val out = tempDir("zarr-out2") + "/g"
     Zarr.export(spark, store, out, level = 1)
     val meta = Zarr.readArrayMeta(s"$out/val")
     assert(meta.shape == Seq(26, 14) && meta.chunks == Seq(2, 2))
@@ -139,7 +139,7 @@ class ZarrSpec extends SparkSpec {
   test("external-writer compatibility: / separator, Infinity fill, no compressor") {
     // hand-built zarr array as another writer would emit it: nested i/j
     // chunk dirs, uncompressed chunks, Infinity fill, no field defaults
-    val d = Files.createTempDirectory("zarr-ext").resolve("a")
+    val d = Paths.get(tempDir("zarr-ext"), "a")
     Files.createDirectories(d)
     Files.write(d.resolve(".zarray"),
       """{"zarr_format":2,"shape":[4,4],"chunks":[2,2],"dtype":"<f8",
@@ -170,7 +170,7 @@ class ZarrSpec extends SparkSpec {
   }
 
   test("readArrayMeta rejects non-v2 / non-C / unknown compressor") {
-    val d = Files.createTempDirectory("zarr-bad")
+    val d = Paths.get(tempDir("zarr-bad"))
     Files.write(d.resolve(".zarray"),
       """{"zarr_format":2,"shape":[2],"chunks":[2],"dtype":"<f8",
         |"compressor":{"id":"blosc"},"fill_value":null,"order":"C",
