@@ -90,15 +90,15 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
 
   /** Real codegen with a LAZY binary child: this predicate runs once per
     * candidate row of the spatial join — the round-3 CodegenFallback
-    * boxed the key and both coords AND copied the ~100-byte WKB out of
-    * the (broadcast) row on EVERY row, ~150 B of garbage per candidate;
-    * at full 32-thread saturation the collector became the join stage's
-    * scaling wall (round-4 stage profile in BENCH.md: encode 0.81 eff,
-    * join 0.66). Here the key/x/y are unboxed and the WKB child's code
-    * is emitted INSIDE the cache-miss branch, so the hit path (every row
-    * after the first per
-    * polygon per JVM) never touches the bytes and allocates at most the
-    * one Coordinate the point locator reads.
+    * boxed the key and both coords on EVERY row. Here the key/x/y are
+    * unboxed and the WKB child's code is emitted INSIDE the cache-miss
+    * branch, so the predicate itself reads the bytes only on a miss.
+    * That does not keep the join's hit path off the WKB: as a
+    * broadcast-hash-join condition, Spark evaluates every build-side
+    * column the condition references before the condition runs, so
+    * `getBinary` copies the polygon's WKB (about 800 B for a 48-vertex
+    * polygon) out of the build row for every candidate pair. Only in a
+    * plain projection or filter is the WKB child skipped on a hit.
     *
     * INVARIANT (required for codegen/interpreted agreement): the key
     * child MUST be `st_geom_key(geom)` over the SAME geometry child — a
@@ -170,15 +170,19 @@ case class StPredicatePoint(first: Expression, second: Expression,
 
 /** Immutable point-predicate evaluator for ONE geometry, built once per
   * JVM and shared by every task thread through the tester table in
-  * [[StPredicatePoint]]. Three tiers, cheapest exact method first:
+  * [[StPredicatePoint]]. Every tier starts with the envelope reject,
+  * written so that a NaN coordinate is rejected too. Then, cheapest exact
+  * method first:
   *  - axis-aligned rectangle: the envelope test IS the covers test
   *    (4 double compares per row; JTS's own Geometry.covers applies the
   *    same shortcut) and strict envelope interiority is contains;
-  *  - any other polygonal geometry: envelope reject then
-  *    IndexedPointInAreaLocator.locate on a fresh Coordinate —
-  *    covers == not EXTERIOR, contains == INTERIOR, no Point object, no
-  *    per-row envelope realloc (the prepared-geometry path allocated an
-  *    Envelope via geometryChanged + visitor objects per call);
+  *  - any other polygonal geometry: a 64 x 64 sub-cell grid over the
+  *    envelope, 2 bits a cell and built once here (see `buildGrid`),
+  *    settles the point when its cell lies wholly inside or wholly
+  *    outside: inside answers true for covers and contains, outside false
+  *    for both. Only a cell some ring edge touches runs
+  *    IndexedPointInAreaLocator.locate on a fresh Coordinate — covers ==
+  *    not EXTERIOR, contains == INTERIOR;
   *  - non-polygonal geometry: PreparedGeometry against a fresh Point
   *    (rare — point/line dims in a PIP join).
   * Sharing is safe because no call writes to this object, and JTS 1.20
@@ -186,6 +190,7 @@ case class StPredicatePoint(first: Expression, second: Expression,
   * a lock and publishes them through volatile fields.
   */
 final class PointTester(geom: Geometry) {
+  import PointTester._
   private val env = geom.getEnvelopeInternal
   private val minX = env.getMinX; private val maxX = env.getMaxX
   private val minY = env.getMinY; private val maxY = env.getMaxY
@@ -197,21 +202,130 @@ final class PointTester(geom: Geometry) {
   private val prepared =
     if (rect || locator != null) null
     else org.locationtech.jts.geom.prep.PreparedGeometryFactory.prepare(geom)
+  /** Grid cells per envelope unit along x and y. */
+  private val sx = Grid / (maxX - minX); private val sy = Grid / (maxY - minY)
+  private val grid: Array[Long] =
+    if (locator != null && maxX > minX && maxY > minY) buildGrid() else null
+
+  private def inEnvelope(x: Double, y: Double): Boolean =
+    x >= minX && x <= maxX && y >= minY && y <= maxY
+
+  /** Inside, Outside or Boundary for a point in the envelope; a point on
+    * the envelope's max edge reads the last cell.
+    */
+  private def cellState(x: Double, y: Double): Int =
+    if (grid == null) Boundary
+    else {
+      val c = math.min(Grid - 1, ((x - minX) * sx).toInt)
+      val r = math.min(Grid - 1, ((y - minY) * sy).toInt)
+      stateAt(grid, r * Grid + c)
+    }
 
   def covers(x: Double, y: Double): Boolean = {
-    if (x < minX || x > maxX || y < minY || y > maxY) false
+    if (!inEnvelope(x, y)) false
     else if (rect) true
-    else if (locator != null)
-      locator.locate(new Coordinate(x, y)) != Location.EXTERIOR
+    else if (locator != null) {
+      val s = cellState(x, y)
+      if (s == Boundary) locator.locate(new Coordinate(x, y)) != Location.EXTERIOR
+      else s == Inside
+    }
     else prepared.covers(Wkb.point(x, y))
   }
 
   def contains(x: Double, y: Double): Boolean = {
-    if (rect) x > minX && x < maxX && y > minY && y < maxY
-    else if (x < minX || x > maxX || y < minY || y > maxY) false
-    else if (locator != null)
-      locator.locate(new Coordinate(x, y)) == Location.INTERIOR
+    if (!inEnvelope(x, y)) false
+    else if (rect) x > minX && x < maxX && y > minY && y < maxY
+    else if (locator != null) {
+      val s = cellState(x, y)
+      if (s == Boundary) locator.locate(new Coordinate(x, y)) == Location.INTERIOR
+      else s == Inside
+    }
     else prepared.contains(Wkb.point(x, y))
+  }
+
+  /** Marks every cell a ring edge touches (shell, holes, every member)
+    * Boundary, then classifies each run of other cells in a row by one
+    * locator call at the centre of its first cell. The cells of a run
+    * share sides and no edge touches their union, so the whole run lies
+    * in the interior or in the exterior; its centre is on no edge, so the
+    * locator answers INTERIOR or EXTERIOR there.
+    */
+  private def buildGrid(): Array[Long] = {
+    val g = new Array[Long](Grid * Grid / 32)
+    def markRing(ring: org.locationtech.jts.geom.LineString): Unit = {
+      val cs = ring.getCoordinateSequence
+      var i = 1
+      while (i < cs.size) {
+        markEdge(g, (cs.getX(i - 1) - minX) * sx, (cs.getY(i - 1) - minY) * sy,
+          (cs.getX(i) - minX) * sx, (cs.getY(i) - minY) * sy)
+        i += 1
+      }
+    }
+    for (k <- 0 until geom.getNumGeometries) {
+      val p = geom.getGeometryN(k).asInstanceOf[org.locationtech.jts.geom.Polygon]
+      markRing(p.getExteriorRing)
+      for (h <- 0 until p.getNumInteriorRing) markRing(p.getInteriorRingN(h))
+    }
+    val w = (maxX - minX) / Grid; val h = (maxY - minY) / Grid
+    var r = 0
+    while (r < Grid) {
+      var c = 0
+      var run = Boundary
+      while (c < Grid) {
+        val i = r * Grid + c
+        if (stateAt(g, i) == Boundary) run = Boundary
+        else {
+          if (run == Boundary)
+            run = if (locator.locate(new Coordinate(minX + (c + 0.5) * w,
+              minY + (r + 0.5) * h)) == Location.INTERIOR) Inside else Outside
+          g(i >>> 5) |= run.toLong << ((i & 31) << 1)
+        }
+        c += 1
+      }
+      r += 1
+    }
+    g
+  }
+}
+
+object PointTester {
+  /** Sub-cells per envelope side: 64 x 64 cells at 2 bits is 1 KB. */
+  private val Grid = 64
+  private val Outside = 0; private val Inside = 1; private val Boundary = 2
+  /** Widening of every edge clip, in cells: far above the rounding of the
+    * cell arithmetic, so a point that rounds into a neighbouring cell
+    * still lies in the widened box its cell was classified over.
+    */
+  private val Slack = 1e-6
+
+  private def stateAt(g: Array[Long], i: Int): Int =
+    ((g(i >>> 5) >>> ((i & 31) << 1)) & 3L).toInt
+
+  private def setBoundary(g: Array[Long], r: Int, c: Int): Unit = {
+    val i = r * Grid + c
+    g(i >>> 5) = (g(i >>> 5) & ~(3L << ((i & 31) << 1))) | (Boundary.toLong << ((i & 31) << 1))
+  }
+
+  private def cellOf(u: Double): Int = math.max(0, math.min(Grid - 1, math.floor(u).toInt))
+
+  /** Marks Boundary every cell whose closed box, widened by [[Slack]],
+    * meets the edge (u0, v0)-(u1, v1) given in cell units: the edge is
+    * clipped to each row band it spans and the clip's column range marked.
+    */
+  private def markEdge(g: Array[Long], u0: Double, v0: Double, u1: Double, v1: Double): Unit = {
+    val vLo = math.min(v0, v1); val vHi = math.max(v0, v1)
+    var r = cellOf(vLo - Slack)
+    val rEnd = cellOf(vHi + Slack)
+    def uAt(v: Double): Double =
+      u0 + math.max(0.0, math.min(1.0, (v - v0) / (v1 - v0))) * (u1 - u0)
+    while (r <= rEnd) {
+      val uA = if (v0 == v1) u0 else uAt(math.max(vLo, r - Slack))
+      val uB = if (v0 == v1) u1 else uAt(math.min(vHi, r + 1 + Slack))
+      var c = cellOf(math.min(uA, uB) - Slack)
+      val cEnd = cellOf(math.max(uA, uB) + Slack)
+      while (c <= cEnd) { setBoundary(g, r, c); c += 1 }
+      r += 1
+    }
   }
 }
 
@@ -219,9 +333,10 @@ object StPredicatePoint {
   /** Most testers the table holds: enough to keep a broadcast side of a
     * few thousand polygons resident (the benchmark's tile join has 2,000)
     * while bounding the heap. A tester retains about 145 B per polygon
-    * vertex (measured on JDK 17: 7.0 KB at 48 vertices, 141 KB at 1,000),
-    * so a full table is 28.5 MB of heap for 48-vertex polygons and about
-    * 580 MB for 1,000-vertex ones.
+    * vertex (measured on JDK 17: 7.0 KB at 48 vertices, 141 KB at 1,000)
+    * plus 1 KB for the sub-cell grid of a non-rectangular polygon, so a
+    * full table is about 33 MB of heap for 48-vertex polygons and about
+    * 584 MB for 1,000-vertex ones.
     */
   private[graft] val TesterBound = 4096
 
@@ -252,7 +367,7 @@ object StPredicatePoint {
   }
 
   /** Hit-path lookup for the codegen'd predicate: no boxing beyond the
-    * Long key, no WKB access, no lock. Returns null on miss.
+    * Long key, no lock. Returns null on miss.
     */
   def testerByKeyOrNull(keyHash: Long): PointTester =
     testers.get(java.lang.Long.valueOf(keyHash))

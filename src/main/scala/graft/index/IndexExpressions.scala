@@ -3,7 +3,7 @@ package graft.index
 import graft.core.Constants
 import graft.geo.{GeoExpressions, Wkb}
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -99,10 +99,7 @@ case class H3Parent(child: Expression, parentRes: Int)
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(v: Any): Any =
     H3.parent(v.asInstanceOf[Long], parentRes)
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, v => s"graft.index.H3.parent($v, $parentRes)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
@@ -112,11 +109,13 @@ case class H3Parent(child: Expression, parentRes: Int)
   * is already WGS84).
   */
 case class S2CellLatLng(left: Expression, right: Expression, level: Int)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(lat: Any, lng: Any): Any =
     S2.cellId(lat.asInstanceOf[Double], lng.asInstanceOf[Double], level)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (lat, lng) => s"graft.index.S2.cellId($lat, $lng, $level)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -147,10 +146,7 @@ case class SphericalCellId(left: Expression, right: Expression, res: Int,
     * garbage per input row, real GC pressure when every hardware thread
     * is saturated).
     */
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val target = if (system == "h3") "graft.index.H3" else "graft.index.S2"
     nullSafeCodeGen(ctx, ev, (x, y) => {
       val m = ctx.freshName("memo")
@@ -317,15 +313,20 @@ case class BngIndexFlagsExpr(child: Expression, resolution: Long)
 }
 
 /** (x, y) -> single BNG grid ref string. Point fast path: pure integer
-  * math, no geometry allocation at all.
+  * math, no geometry allocation at all. Codegen'd like [[BngCellId]]; a
+  * point outside the BNG extent fails with the same
+  * IllegalArgumentException in both modes.
   */
 case class BngPointRef(left: Expression, right: Expression, resolution: Long)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression {
   override def dataType: DataType = StringType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(x: Any, y: Any): Any =
     UTF8String.fromBytes(Bng.gridRefAscii(
       x.asInstanceOf[Double], y.asInstanceOf[Double], resolution))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => "org.apache.spark.unsafe.types.UTF8String.fromBytes(" +
+      s"graft.index.Bng.gridRefAscii($x, $y, ${resolution}L))")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }
@@ -346,13 +347,19 @@ case class BngToBounds(child: Expression)
 
 /** (x, y) -> packed long cell id (compact join key; long equi-joins beat
   * string keys in shuffle width and comparison cost at 10^12 rows).
+  * Real codegen, not CodegenFallback: Spark keeps an operator holding a
+  * non-leaf CodegenFallback out of whole-stage codegen, and the
+  * point-in-polygon join puts this expression in the point side's
+  * Project, beside the other cell encoders.
   */
 case class BngCellId(left: Expression, right: Expression, resolution: Long)
-    extends BinaryExpression with CodegenFallback {
+    extends BinaryExpression {
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override protected def nullSafeEval(x: Any, y: Any): Any =
     Bng.cellId(x.asInstanceOf[Double], y.asInstanceOf[Double], resolution)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.index.Bng.cellId($x, $y, ${resolution}L)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
 }

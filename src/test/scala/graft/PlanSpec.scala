@@ -26,6 +26,54 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"))
   }
 
+  test("pointInPolygon: every point-side Project runs inside whole-stage codegen") {
+    import graft.index.IndexExpressions._
+    import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    // the headline job's point side: cell encoders, then the join's own
+    // bng_cell_id; a CodegenFallback among them keeps the Project out of
+    // the stage and runs it through boxed eval calls
+    val pts = spark.range(0, 4000, 1, 4)
+      .select(col("id"), (col("id") * 317.0 % 700000).as("x"), (col("id") * 631.0 % 1300000).as("y"))
+      .withColumn("h3_9", h3_index_point(col("x"), col("y"), 9))
+      .withColumn("s2_12", s2_index_point(col("x"), col("y"), 12))
+      .withColumn("bng10", bng_index_point(col("x"), col("y"), 10000L))
+    val polys = Seq((1L, graft.geo.Wkb.write(graft.geo.Wkb.readWkt(
+      "POLYGON ((100000 100000, 300000 120000, 200000 400000, 100000 100000))"))))
+      .toDF("poly_id", "geometry")
+    val joined = graft.ops.SpatialJoin.pointInPolygon(pts, "x", "y", polys, "geometry")
+    assert(joined.collect().nonEmpty)
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case q: QueryStageExec => unwrap(q.plan)
+      case other => other
+    }
+    val plan = unwrap(joined.queryExecution.executedPlan)
+    // Projects reached from a WholeStageCodegenExec without crossing an
+    // InputAdapter are compiled into that stage
+    def inStage(p: SparkPlan, staged: Boolean): Seq[(SparkPlan, Boolean)] = p match {
+      case w: WholeStageCodegenExec => inStage(w.child, staged = true)
+      case i: InputAdapter => inStage(i.child, staged = false)
+      case other => (other, staged) +: other.children.flatMap(inStage(_, staged))
+    }
+    val staged = inStage(plan, staged = false)
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, plan.treeString)
+    val streamed = joins.head.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildRight => joins.head.left
+      case _ => joins.head.right
+    }
+    val pointSide = streamed.collect { case p: ProjectExec => p }
+    assert(pointSide.exists(_.projectList.exists(_.name == "__cell__")), plan.treeString)
+    pointSide.foreach { p =>
+      assert(staged.exists { case (q, s) => (q eq p) && s },
+        s"point-side Project outside whole-stage codegen:\n${plan.treeString}")
+    }
+  }
+
   test("q1/q13: two-phase hash aggregation (map-side partial before exchange)") {
     Seq("q1_agg", "q13_tile_counts").foreach { q =>
       val p = plan(q)
