@@ -39,16 +39,25 @@ object Wkb {
     * swaps or turns into a point or a line) still goes through JTS, so
     * the bytes always match.
     */
-  def boxWkb(minx: Double, miny: Double, maxx: Double, maxy: Double): Array[Byte] =
-    if (!(minx < maxx && miny < maxy)) write(box(minx, miny, maxx, maxy))
-    else {
-      val b = java.nio.ByteBuffer.allocate(93) // big-endian
-      b.put(0.toByte).putInt(3).putInt(1).putInt(5)
-      def xy(x: Double, y: Double): Unit = {
-        b.putLong(java.lang.Double.doubleToLongBits(x))
-        b.putLong(java.lang.Double.doubleToLongBits(y))
-      }
-      xy(minx, miny); xy(minx, maxy); xy(maxx, maxy); xy(maxx, miny); xy(minx, miny)
-      b.array()
-    }
+  def boxWkb(minx: Double, miny: Double, maxx: Double, maxy: Double): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(93)
+    if (putBox(b, minx, miny, maxx, maxy)) b.array() else write(box(minx, miny, maxx, maxy))
+  }
+
+  /** Writes [[boxWkb]]'s 93 bytes into big-endian `b` from index 0 when
+    * minx < maxx and miny < maxy, so a caller can reuse one buffer;
+    * false, writing nothing, for any other extent.
+    */
+  def putBox(b: java.nio.ByteBuffer, minx: Double, miny: Double, maxx: Double,
+      maxy: Double): Boolean = (minx < maxx && miny < maxy) && {
+    b.put(0, 0.toByte).putInt(1, 3).putInt(5, 1).putInt(9, 5)
+    putXY(b, 13, minx, miny); putXY(b, 29, minx, maxy); putXY(b, 45, maxx, maxy)
+    putXY(b, 61, maxx, miny); putXY(b, 77, minx, miny)
+    true
+  }
+
+  private def putXY(b: java.nio.ByteBuffer, at: Int, x: Double, y: Double): Unit = {
+    b.putLong(at, java.lang.Double.doubleToLongBits(x))
+    b.putLong(at + 8, java.lang.Double.doubleToLongBits(y))
+  }
 }

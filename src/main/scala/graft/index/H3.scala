@@ -233,28 +233,4 @@ object H3 {
     val qr = cubeRoundPacked(pq, pr)
     pack(parentRes, f, (qr >> 32).toInt, qr.toInt)
   }
-
-  /** Hex ring (axial k-ring boundary) around a cell, same face. */
-  def ring(id: Long, k: Int): Seq[Long] = {
-    val res = resOf(id); val f = faceOfId(id)
-    val ci = iOf(id); val cj = jOf(id)
-    if (k == 0) Seq(id)
-    else {
-      val dirs = Array((1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1))
-      var q = ci + dirs(4)._1 * k
-      var r = cj + dirs(4)._2 * k
-      val out = Seq.newBuilder[Long]
-      var side = 0
-      while (side < 6) {
-        var step = 0
-        while (step < k) {
-          out += pack(res, f, q, r)
-          q += dirs(side)._1; r += dirs(side)._2
-          step += 1
-        }
-        side += 1
-      }
-      out.result()
-    }
-  }
 }

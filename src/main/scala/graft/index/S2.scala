@@ -127,16 +127,6 @@ object S2 {
     (id & -lsb) | lsb
   }
 
-  /** (latDeg, lngDeg) -> (face, leaf i, leaf j). */
-  def faceIJ(latDeg: Double, lngDeg: Double): (Int, Int, Int) = {
-    val phi = math.toRadians(latDeg)
-    val theta = math.toRadians(lngDeg)
-    val cosPhi = math.cos(phi)
-    val (face, u, v) = xyzToFaceUV(
-      math.cos(theta) * cosPhi, math.sin(theta) * cosPhi, math.sin(phi))
-    (face, stToIJ(uvToST(u)), stToIJ(uvToST(v)))
-  }
-
   /** Mean Earth radius used by every spherical-distance surface in the
     * engine.
     */

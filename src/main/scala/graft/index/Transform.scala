@@ -243,34 +243,4 @@ object Transform {
     }
     m
   }
-
-  /** WGS84 (degrees) -> BNG (metres): quasi-Newton inverse of
-    * [[bngToWgs84Deg]] with a numeric Jacobian — the forward map is
-    * near-affine over the canvas, so 3-4 iterations reach sub-millimetre.
-    * Used by cover refinement (cell center -> planar distance tests),
-    * NOT the per-row hot path.
-    */
-  def wgs84ToBng(latDeg: Double, lngDeg: Double): (Double, Double) = {
-    var e = 400000.0
-    var n = 650000.0
-    var iter = 0
-    while (iter < 12) {
-      val (la, lo) = bngToWgs84Deg(e, n)
-      val dLat = latDeg - la
-      val dLng = lngDeg - lo
-      if (math.abs(dLat) < 1e-11 && math.abs(dLng) < 1e-11) iter = 12
-      else {
-        val h = 100.0
-        val (laE, loE) = bngToWgs84Deg(e + h, n)
-        val (laN, loN) = bngToWgs84Deg(e, n + h)
-        val a11 = (laE - la) / h; val a12 = (laN - la) / h
-        val a21 = (loE - lo) / h; val a22 = (loN - lo) / h
-        val det = a11 * a22 - a12 * a21
-        e += (dLat * a22 - dLng * a12) / det
-        n += (dLng * a11 - dLat * a21) / det
-        iter += 1
-      }
-    }
-    (e, n)
-  }
 }

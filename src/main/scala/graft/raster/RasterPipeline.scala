@@ -4,7 +4,9 @@ import graft.core.Constants
 import graft.index.IndexExpressions._
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The reference's `DataFrameWrapper.to_zarr` (`dataframe.py:415-543`,
   * `_dataframe.py:401-673`) as a Spark-first distributed pipeline:
@@ -183,56 +185,54 @@ object RasterPipeline {
 
   /** Raster -> vector: read a TileStore column back as one row per
     * non-nodata cell with its box geometry — the inverse direction of
-    * the raster<->vector materialization pair. Tiles parallelize as a
-    * Dataset (one task per tile, no shuffle). Each task decodes only its
-    * region's burned cells ([[TileStore.readCells]]) and writes their
-    * boxes' WKB directly, so the cost follows the burned cells, not the
-    * tile area. A region that does not hold tileCells^2 cells fails the
-    * task with the tile's name.
+    * the raster<->vector materialization pair. A [[CellScan]]: the tiles
+    * are the input partitions (one job, no exchange), each decodes only
+    * its region's burned cells ([[TileStore.readCells]]) and writes their
+    * rows and box WKB directly, so the cost follows the burned cells,
+    * not the tile area. A region that does not hold tileCells^2 cells
+    * fails the task with the tile's name.
     */
   def fromTileStore(spark: org.apache.spark.sql.SparkSession, path: String,
       column: String): DataFrame = {
-    import spark.implicits._
     val store = new TileStore(path)
     val h = store.header
     val spec = h.columns.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(s"no column $column in $path"))
     val tileCells = math.round(h.tileSize / h.cellSize).toInt
-    val tiles = store.tiles()
     val cellSize = h.cellSize
-    val dtype = spec.dtype
-    val nodata = spec.nodata
-    // One task per tile up to the cluster's parallelism — a fixed cap
-    // would serialize a full 10 m national canvas (13k tiles) onto 64
-    // cores no matter the cluster size.
-    spark.createDataset(tiles)
-      .repartition(math.max(1,
-        math.min(tiles.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { ref =>
-        val cells = new TileStore(path).readCells(ref, column, dtype, nodata,
-          tileCells * tileCells)
+    val schema = StructType.fromDDL("tile STRING, cell_e BIGINT NOT NULL, " +
+      "cell_n BIGINT NOT NULL, value DOUBLE NOT NULL, geometry BINARY")
+    CellScan.frame(spark, store.tiles(), schema) { refs =>
+      val out = new CellRows(5)
+      val st = new TileStore(path)
+      refs.flatMap { ref =>
+        val cells = st.readCells(ref, column, spec.dtype, spec.nodata, tileCells * tileCells)
+        val tile = UTF8String.fromString(ref)
         val (minx, _, _, maxy) = graft.index.Bng.bounds(ref)
-        Samples.cellBoxes(cells, tileCells, 0, minx, maxy, cellSize, cellSize) {
-          (r, c, v, box) =>
-            val cellMinX = minx + c * cellSize
-            val cellMaxY = maxy - r * cellSize
-            (ref, (cellMinX / cellSize).toLong,
-              ((cellMaxY - cellSize) / cellSize).toLong, v, box)
+        out.rows(cells.size) { k =>
+          val cellMinX = minx + cells.index(k) % tileCells * cellSize
+          val cellMaxY = maxy - cells.index(k) / tileCells * cellSize
+          out.row.write(0, tile)
+          out.row.write(1, (cellMinX / cellSize).toLong)
+          out.row.write(2, ((cellMaxY - cellSize) / cellSize).toLong)
+          out.row.write(3, cells.value(k))
+          out.box(4, cellMinX, cellMaxY, cellSize, cellSize)
+          true
         }
       }
-      .toDF("tile", "cell_e", "cell_n", "value", "geometry")
+    }
   }
 
   /** Distributed raster resample: every tile of a TileStore column is
-    * resampled to a new cell size independently (Dataset over tiles, no
-    * shuffle — SURVEY.md §3.3: the reference's sequential dask chunk loop
-    * becomes embarrassingly parallel). Nearest neighbour for categorical
-    * bands, bilinear for continuous (`_raster.py:87-138` semantics).
+    * resampled to a new cell size independently, the tiles dealt into
+    * input partitions as a [[CellScan]] deals them (no exchange —
+    * SURVEY.md §3.3: the reference's sequential dask chunk loop becomes
+    * embarrassingly parallel). Nearest neighbour for categorical bands,
+    * bilinear for continuous (`_raster.py:87-138` semantics).
     */
   def resampleStore(spark: org.apache.spark.sql.SparkSession,
       srcPath: String, dstPath: String, dstCellSize: Double,
       categorical: Boolean, overwrite: Boolean = false): Unit = {
-    import spark.implicits._
     val src = new TileStore(srcPath)
     val h = src.header
     val dst = new TileStore(dstPath)
@@ -240,21 +240,17 @@ object RasterPipeline {
     val srcCells = math.round(h.tileSize / h.cellSize).toInt
     val dstCells = math.round(h.tileSize / dstCellSize).toInt
     val specs = h.columns
-    val tiles = src.tiles()
-    spark.createDataset(tiles)
-      .repartition(math.max(1,
-        math.min(tiles.size, spark.sparkContext.defaultParallelism)))
-      .foreach { ref =>
-        val s = new TileStore(srcPath)
-        val d = new TileStore(dstPath)
-        specs.foreach { spec =>
-          val data = s.readRegion(ref, spec.name, spec.dtype)
-          val res =
-            if (categorical) Resample.nearest(data, srcCells, srcCells, dstCells, dstCells)
-            else Resample.bilinear(data, srcCells, srcCells, dstCells, dstCells)
-          d.writeRegion(ref, spec.name, spec.dtype, res)
-        }
+    CellScan.partitions(spark, src.tiles()).foreach { ref =>
+      val s = new TileStore(srcPath)
+      val d = new TileStore(dstPath)
+      specs.foreach { spec =>
+        val data = s.readRegion(ref, spec.name, spec.dtype)
+        val res =
+          if (categorical) Resample.nearest(data, srcCells, srcCells, dstCells, dstCells)
+          else Resample.bilinear(data, srcCells, srcCells, dstCells, dstCells)
+        d.writeRegion(ref, spec.name, spec.dtype, res)
       }
+    }
   }
 
   /** Reference `_dataframe.py:444-448`: lookup attr gets a nodata entry. */

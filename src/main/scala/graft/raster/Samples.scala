@@ -10,10 +10,11 @@ final class SparseCells(val index: Array[Int], val value: Array[Double]) {
   def size: Int = index.length
 }
 
-/** Raster sample codec shared by [[TileStore]] regions and [[Tiff]]
-  * strips: the dtype names of the store's ladder (Constants.DtypeOrder,
-  * plus int8), each decoded in one `while` loop whose per-cell dispatch is
-  * an Int switch resolved once per call, not a string match per cell.
+/** Raster sample codec shared by [[TileStore]] regions, [[Tiff]] strips
+  * and [[Zarr]] chunks: the dtype names of the store's ladder
+  * (Constants.DtypeOrder, plus int8), each decoded in one `while` loop
+  * whose per-cell dispatch is an Int switch resolved once per call, not a
+  * string match per cell.
   */
 private[raster] object Samples {
   private final val U8 = 0
@@ -125,50 +126,50 @@ private[raster] object Samples {
 
   /** Only the non-nodata cells among the first `n` samples of `bb`, with
     * no per-cell allocation: cost scales with the burned cells kept, not
-    * with boxing every cell of the grid.
+    * with boxing every cell of the grid. An 8-byte word that repeats the
+    * sentinel's stored sample (read in `bb`'s byte order, so either order
+    * works) holds only nodata and is skipped whole; every other sample
+    * gets the NaN-safe test. The skip is off when the stored sentinel
+    * does not decode as nodata (an int64 column under a NaN sentinel
+    * stores 0), so only the per-sample test decides there.
     */
   def nonNodata(bb: ByteBuffer, dtype: String, n: Int, nodata: Double): SparseCells = {
     val c = code(dtype)
+    val width = bytesPer(dtype)
+    val perWord = 8 / width
+    val pattern = ByteBuffer.allocate(8).order(bb.order)
+    (0 until perWord).foreach(s => put(pattern, width, s, bits(c, nodata)))
+    val sentinel = pattern.getLong(0)
+    val stored = sample(pattern, c, 0)
+    val skip = stored == nodata || (stored.isNaN && nodata.isNaN)
+    val words = if (skip) n / perWord else 0
     var index = new Array[Int](64)
     var value = new Array[Double](64)
     var k = 0
+    var w = 0
     var i = 0
     while (i < n) {
-      val v = sample(bb, c, i)
-      // NaN-safe: a NaN sentinel matches NaN cells
-      if (!(v == nodata || (v.isNaN && nodata.isNaN))) {
-        if (k == index.length) {
-          index = java.util.Arrays.copyOf(index, k * 2)
-          value = java.util.Arrays.copyOf(value, k * 2)
+      while (w < words && bb.getLong(w * 8) == sentinel) w += 1
+      i = w * perWord
+      // the first word that is not all nodata, or the tail past the words
+      val end = if (w < words) { w += 1; w * perWord } else n
+      while (i < end) {
+        val v = sample(bb, c, i)
+        // NaN-safe: a NaN sentinel matches NaN cells
+        if (!(v == nodata || (v.isNaN && nodata.isNaN))) {
+          if (k == index.length) {
+            index = java.util.Arrays.copyOf(index, k * 2)
+            value = java.util.Arrays.copyOf(value, k * 2)
+          }
+          index(k) = i
+          value(k) = v
+          k += 1
         }
-        index(k) = i
-        value(k) = v
-        k += 1
+        i += 1
       }
-      i += 1
     }
     new SparseCells(java.util.Arrays.copyOf(index, k), java.util.Arrays.copyOf(value, k))
   }
-
-  /** One row per cell of `cells`, the raster->vector emitter of both
-    * cell readers. Cell index `idx` sits at grid row
-    * `r = rowOffset + idx / width`, column `c = idx % width`; its box is
-    * x in [originX + c * cellX, + cellX], y in [maxy - cellY, maxy] with
-    * `maxy = originY - r * cellY`. `row` gets r, c, the value and the
-    * box as WKB.
-    */
-  def cellBoxes[T](cells: SparseCells, width: Int, rowOffset: Int,
-      originX: Double, originY: Double, cellX: Double, cellY: Double)(
-      row: (Int, Int, Double, Array[Byte]) => T): Iterator[T] =
-    Iterator.range(0, cells.size).map { k =>
-      val idx = cells.index(k)
-      val r = rowOffset + idx / width
-      val c = idx % width
-      val minx = originX + c * cellX
-      val maxy = originY - r * cellY
-      row(r, c, cells.value(k),
-        graft.geo.Wkb.boxWkb(minx, maxy - cellY, minx + cellX, maxy))
-    }
 }
 
 /** One tile region being burned: `cells` samples of `dtype` as the

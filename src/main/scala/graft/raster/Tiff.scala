@@ -1,6 +1,7 @@
 package graft.raster
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.StructType
 
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
@@ -21,11 +22,11 @@ import scala.collection.mutable
   * geotransform.
   *
   * Scale shape: the IFD + strip table parse on the driver (bytes, not
-  * pixels); pixel decode distributes one task per strip via the same
-  * file-per-task pattern as [[RasterPipeline.fromTileStore]], so a
-  * large raster decompresses in parallel and the cells enter the
-  * engine's standard (cell_e, cell_n, value, geometry-WKB) contract
-  * with no driver materialization.
+  * pixels); pixel decode runs on the executors, the strips read as the
+  * input partitions of the same [[CellScan]] as
+  * [[RasterPipeline.fromTileStore]], so a large raster decompresses in
+  * parallel and the cells enter the engine's (row, col, value,
+  * geometry-WKB) contract with no driver materialization.
   */
 object Tiff {
 
@@ -177,19 +178,17 @@ object Tiff {
     (inf, out)
   }
 
-  /** Distributed read: one task per strip, same cell contract as
-    * [[RasterPipeline.fromTileStore]] — (row, col, value, cell box as
-    * WKB). `nodata` cells are dropped (NaN-safe).
+  /** Distributed read, a [[CellScan]] over the strips (one job, no
+    * exchange), same cell contract as [[RasterPipeline.fromTileStore]]:
+    * (row, col, value, cell box as WKB). `nodata` cells are dropped
+    * (NaN-safe).
     */
   def cells(spark: org.apache.spark.sql.SparkSession, path: String,
       nodata: Double = Double.NaN): DataFrame = {
-    import spark.implicits._
     val inf = info(path) // driver-side header parse (bytes, not pixels)
-    val strips = inf.stripOffsets.indices.toSeq
-    spark.createDataset(strips)
-      .repartition(math.max(1,
-        math.min(strips.size, spark.sparkContext.defaultParallelism)))
-      .flatMap { s =>
+    CellScan.frame(spark, inf.stripOffsets.indices, CellsSchema) { strips =>
+      val out = new CellRows(4)
+      strips.flatMap { s =>
         val rows = math.min(inf.rowsPerStrip, inf.height - s * inf.rowsPerStrip)
         val raf = new java.io.RandomAccessFile(path, "r")
         val raw = new Array[Byte](inf.stripCounts(s).toInt)
@@ -197,11 +196,22 @@ object Tiff {
         finally raf.close()
         val cells = Samples.nonNodata(stripSamples(raw, inf, rows), inf.dtype,
           rows * inf.width, nodata)
-        Samples.cellBoxes(cells, inf.width, s * inf.rowsPerStrip, inf.originX, inf.originY,
-          inf.cellSizeX, inf.cellSizeY)((r, c, v, box) => (r.toLong, c.toLong, v, box))
+        out.rows(cells.size) { k =>
+          val r = s * inf.rowsPerStrip + cells.index(k) / inf.width
+          val c = cells.index(k) % inf.width
+          out.row.write(0, r.toLong)
+          out.row.write(1, c.toLong)
+          out.row.write(2, cells.value(k))
+          out.box(3, inf.originX + c * inf.cellSizeX, inf.originY - r * inf.cellSizeY,
+            inf.cellSizeX, inf.cellSizeY)
+          true
+        }
       }
-      .toDF("row", "col", "value", "geometry")
+    }
   }
+
+  private val CellsSchema =
+    StructType.fromDDL("row BIGINT NOT NULL, col BIGINT NOT NULL, value DOUBLE NOT NULL, geometry BINARY")
 
   // ------------------------------------------------------------------
   // writer (test fixtures + golden generation): single band, strips

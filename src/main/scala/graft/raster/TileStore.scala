@@ -91,13 +91,13 @@ class TileStore(val path: String) {
     * write, 1.5x faster to read and 28% smaller than the round-1
     * Deflater(BEST_SPEED) on a 2%-dense uint8 region (BENCH.md). Each
     * region is ONE frame from one-shot `Zstd.compress` (the frame records
-    * its content size), and reads decode through
-    * `ZstdInputStreamNoFinalizer` closed in `finally`. The finalizable
-    * `ZstdOutputStream`/`ZstdInputStream` per region stayed reachable
-    * until a finalizer ran; with them, the raster_tiles benchmark (240
-    * regions written and read back per pass) measured 117-126 MB live
-    * heap against 86-88 MB without. Reads sniff the frame magic, so
-    * streamed Zstd frames and round-1 DEFLATE stores stay readable.
+    * its content size), and reads decode it with one-shot
+    * `Zstd.decompress`. The finalizable `ZstdOutputStream`/
+    * `ZstdInputStream` per region stayed reachable until a finalizer ran;
+    * with them, the raster_tiles benchmark (240 regions written and read
+    * back per pass) measured 117-126 MB live heap against 86-88 MB
+    * without. Reads sniff the frame magic, so streamed Zstd frames and
+    * round-1 DEFLATE stores stay readable.
     */
   def writeRegion(tileRef: String, column: String, dtype: String,
       data: Array[Double], nodata: Double = Double.NaN): Long = {
@@ -134,11 +134,18 @@ class TileStore(val path: String) {
     // DEFLATE region.
     val isZstd = raw.length >= 4 && raw(0) == 0x28.toByte && raw(1) == 0xB5.toByte &&
       raw(2) == 0x2F.toByte && raw(3) == 0xFD.toByte
-    val src = new java.io.ByteArrayInputStream(raw)
-    val in =
-      if (isZstd) new com.github.luben.zstd.ZstdInputStreamNoFinalizer(src)
-      else new java.util.zip.InflaterInputStream(src)
-    val bytes = try in.readAllBytes() finally in.close()
+    // A one-shot frame records its content size and decodes in one call;
+    // streamed frames and DEFLATE regions decode through a stream.
+    val size = if (isZstd) com.github.luben.zstd.Zstd.getFrameContentSize(raw) else -1L
+    val bytes =
+      if (size >= 0 && size <= Int.MaxValue) com.github.luben.zstd.Zstd.decompress(raw, size.toInt)
+      else {
+        val src = new java.io.ByteArrayInputStream(raw)
+        val in =
+          if (isZstd) new com.github.luben.zstd.ZstdInputStreamNoFinalizer(src)
+          else new java.util.zip.InflaterInputStream(src)
+        try in.readAllBytes() finally in.close()
+      }
     ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
   }
 

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Zarr v2 bit-format export/read for [[TileStore]] — closes the one
@@ -29,10 +29,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - consolidated `.zmetadata` (zarr_consolidated_format 1) so
   *    `open_zarr(..., consolidated=True)` needs one metadata read.
   *
-  * The export is DISTRIBUTED: one task per (tile, column) region
-  * re-encodes store bytes into a zarr chunk, executor-side, through the
-  * same atomic tmp+move protocol TileStore regions use — at a national
-  * 10 m canvas that is 13k independent tasks, not a driver loop.
+  * The export is DISTRIBUTED: each (tile, column) region is re-encoded
+  * into a zarr chunk executor-side, the regions dealt into input
+  * partitions as a [[CellScan]] deals its units, through the same
+  * atomic tmp+move protocol TileStore regions use — at a national 10 m
+  * canvas that is 13k independent region writes, not a driver loop.
   */
 object Zarr {
 
@@ -129,7 +130,7 @@ object Zarr {
   /** Export a TileStore as a zarr v2 group. Chunk grid == tile grid
     * (requires the canvas to be tile-aligned, which every store this
     * engine writes is: BNG canvases start at 0 and end on tileSize
-    * multiples). Chunk re-encodes run one-task-per-(tile,column) on the
+    * multiples). Chunk re-encodes run per (tile, column) on the
     * executors; JSON metadata is driver-written once, like the skeleton.
     */
   /** Dimension / coordinate-array names. The reference's on-disk format
@@ -141,7 +142,6 @@ object Zarr {
   def export(spark: SparkSession, storePath: String, outPath: String,
       level: Int = 1,
       dimNames: (String, String) = ("northings", "eastings")): Unit = {
-    import spark.implicits._
     val (dimY, dimX) = dimNames
     val store = new TileStore(storePath)
     val h = store.header
@@ -221,19 +221,16 @@ object Zarr {
       val sp = storePath; val op = outPath
       val cellSize = h.cellSize; val maxY = h.canvasMaxY
       val minX = h.canvasMinX; val tileSize = h.tileSize; val lvl = level
-      spark.createDataset(work)
-        .repartition(math.max(1,
-          math.min(work.size, spark.sparkContext.defaultParallelism)))
-        .foreach { case (ref, colName, dtype) =>
-          val st = new TileStore(sp)
-          val data = st.readRegion(ref, colName, dtype)
-          val (minx, _, _, maxy) = graft.index.Bng.bounds(ref)
-          val ci = math.round((maxY - maxy) / tileSize).toInt
-          val cj = math.round((minx - minX) / tileSize).toInt
-          val zdt = zarrDtype(dtype)
-          val payload = deflate(encode(zdt, data), lvl)
-          writeAtomic(Paths.get(op, colName), s"$ci.$cj", payload)
-        }
+      CellScan.partitions(spark, work).foreach { case (ref, colName, dtype) =>
+        val st = new TileStore(sp)
+        val data = st.readRegion(ref, colName, dtype)
+        val (minx, _, _, maxy) = graft.index.Bng.bounds(ref)
+        val ci = math.round((maxY - maxy) / tileSize).toInt
+        val cj = math.round((minx - minX) / tileSize).toInt
+        val zdt = zarrDtype(dtype)
+        val payload = deflate(encode(zdt, data), lvl)
+        writeAtomic(Paths.get(op, colName), s"$ci.$cj", payload)
+      }
     }
   }
 
@@ -301,25 +298,28 @@ object Zarr {
     * (or `i/j` under the `/` separator).
     */
   def readChunk(arrayPath: String, meta: ArrayMeta, ci: Int, cj: Int = 0): Array[Double] = {
-    val f =
-      if (meta.chunks.length == 1) Paths.get(arrayPath, s"$ci")
-      else if (meta.sep == "/") Paths.get(arrayPath, s"$ci", s"$cj")
-      else Paths.get(arrayPath, s"$ci.$cj")
-    val n = meta.chunks.product
-    if (!Files.exists(f)) Array.fill(n)(meta.fill)
-    else {
-      val raw = Files.readAllBytes(f)
-      decode(meta.dtype, if (meta.compressed) inflate(raw) else raw)
-    }
+    val f = chunkPath(arrayPath, meta, ci, cj)
+    if (!Files.exists(f)) Array.fill(meta.chunks.product)(meta.fill)
+    else decode(meta.dtype, chunkBytes(f, meta))
   }
 
-  /** Distributed zarr scan: every WRITTEN chunk of a 2-D array becomes
-    * one task emitting its non-fill cells as (row, col, value) in global
-    * array coordinates — the read direction of the export, shaped like
-    * [[Tiff.cells]] (one task per chunk, no shuffle).
+  private def chunkPath(arrayPath: String, meta: ArrayMeta, ci: Int, cj: Int): java.nio.file.Path =
+    if (meta.chunks.length == 1) Paths.get(arrayPath, s"$ci")
+    else if (meta.sep == "/") Paths.get(arrayPath, s"$ci", s"$cj")
+    else Paths.get(arrayPath, s"$ci.$cj")
+
+  /** A chunk file's C-order little-endian payload. */
+  private def chunkBytes(f: java.nio.file.Path, meta: ArrayMeta): Array[Byte] = {
+    val raw = Files.readAllBytes(f)
+    if (meta.compressed) inflate(raw) else raw
+  }
+
+  /** Distributed zarr scan: the WRITTEN chunks of a 2-D array are the
+    * units of a [[CellScan]] (one job, no exchange), each emitting its
+    * non-fill cells as (row, col, value) in global array coordinates —
+    * the read direction of the export, shaped like [[Tiff.cells]].
     */
   def cells(spark: SparkSession, arrayPath: String): DataFrame = {
-    import spark.implicits._
     val meta = readArrayMeta(arrayPath)
     require(meta.shape.length == 2, "cells() reads 2-D arrays")
     import scala.jdk.CollectionConverters._
@@ -350,21 +350,27 @@ object Zarr {
       }
     val (tr, tc) = (meta.chunks(0), meta.chunks(1))
     val (nr, nc) = (meta.shape(0), meta.shape(1))
-    val ap = arrayPath
-    spark.createDataset(present)
-      .repartition(math.max(1,
-        math.min(present.size max 1, spark.sparkContext.defaultParallelism)))
-      .flatMap { case (ci, cj) =>
-        val m = readArrayMeta(ap)
-        val data = readChunk(ap, m, ci, cj)
-        val fill = m.fill
-        data.iterator.zipWithIndex.collect {
-          case (v, idx) if !(v == fill || (v.isNaN && fill.isNaN)) =>
-            val r = ci * tr + idx / tc
-            val c = cj * tc + idx % tc
-            (r, c, v)
-        }.filter { case (r, c, _) => r < nr && c < nc }
+    val dtype = StoreDtype(meta.dtype)
+    CellScan.frame(spark, present, CellsSchema) { chunks =>
+      val out = new CellRows(3)
+      chunks.flatMap { case (ci, cj) =>
+        val bytes = chunkBytes(chunkPath(arrayPath, meta, ci, cj), meta)
+        val cells = Samples.nonNodata(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN),
+          dtype, bytes.length / Samples.bytesPer(dtype), meta.fill)
+        out.rows(cells.size) { k =>
+          val r = ci * tr + cells.index(k) / tc
+          val c = cj * tc + cells.index(k) % tc
+          r < nr && c < nc && {
+            out.row.write(0, r)
+            out.row.write(1, c)
+            out.row.write(2, cells.value(k))
+            true
+          }
+        }
       }
-      .toDF("row", "col", "value")
+    }
   }
+
+  private val CellsSchema =
+    StructType.fromDDL("row INT NOT NULL, col INT NOT NULL, value DOUBLE NOT NULL")
 }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge to Spark's package-private Column <-> Expression
   * converters (Spark 4.x moved Column to a ColumnNode facade; the classic
@@ -30,4 +33,13 @@ object Bridge {
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
         "graft", name),
       (es: Seq[Expression]) => builder(es)))
+
+  /** A frame over catalyst rows an RDD writes itself, with no encoder:
+    * the session's `internalCreateDataFrame` (private[sql]). The rows
+    * must match `schema`.
+    */
+  def internalFrame(spark: org.apache.spark.sql.SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 }

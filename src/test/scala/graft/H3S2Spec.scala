@@ -77,7 +77,7 @@ class H3S2Spec extends AnyFunSuite {
     } yield {
       val (lat, lng) = Transform.bngToWgs84Deg(
         math.min(x, 699999).toDouble, math.min(y, 1299999).toDouble)
-      S2.faceIJ(lat, lng)._1
+      S2.face(S2.cellId(lat, lng, 0))
     }).distinct
     assert(faces == Seq(2), s"canvas spans faces $faces")
   }
@@ -101,18 +101,6 @@ class H3S2Spec extends AnyFunSuite {
         Transform.bngToWgs84DegInto(e, n, fast)
         Transform.bngToWgs84ExactInto(e, n, exact)
         assert(fast(0) == exact(0) && fast(1) == exact(1))
-    }
-  }
-
-  test("wgs84ToBng inverts bngToWgs84Deg to sub-millimetre") {
-    (0 until 200).foreach { k =>
-      val h = graft.input.WebTable.splitmix64(k.toLong * 7211L)
-      val e = java.lang.Long.remainderUnsigned(h, 700000L).toDouble
-      val n = java.lang.Long.remainderUnsigned(h >>> 17, 1300000L).toDouble
-      val (lat, lng) = Transform.bngToWgs84Deg(e, n)
-      val (e2, n2) = Transform.wgs84ToBng(lat, lng)
-      assert(math.abs(e2 - e) < 1e-3 && math.abs(n2 - n) < 1e-3,
-        s"($e,$n) -> ($e2,$n2)")
     }
   }
 
@@ -161,21 +149,13 @@ class H3S2Spec extends AnyFunSuite {
     }
   }
 
-  test("H3 ring: 6k cells per ring, unique, ring 0 = self") {
-    val id = H3.cellId(51.5, -0.12, 8)
-    assert(H3.ring(id, 0) == Seq(id))
-    (1 to 4).foreach { k =>
-      val r = H3.ring(id, k)
-      assert(r.size == 6 * k)
-      assert(r.distinct.size == r.size)
-      assert(!r.contains(id))
-    }
-  }
-
   test("H3 neighbours: adjacent points fall in same or ring-1 cell") {
     val id = H3.cellId(51.5, -0.12, 8)
     val near = H3.cellId(51.5005, -0.12, 8)
-    val ring1 = (H3.ring(id, 0) ++ H3.ring(id, 1)).toSet
+    // the cell and its six axial neighbours on the same face
+    val ring1 = Seq((0, 0), (1, 0), (1, -1), (0, -1), (-1, 0), (-1, 1), (0, 1)).map {
+      case (di, dj) => H3.pack(H3.resOf(id), H3.faceOfId(id), H3.iOf(id) + di, H3.jOf(id) + dj)
+    }
     assert(ring1.contains(near))
   }
 
