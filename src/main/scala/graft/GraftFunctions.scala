@@ -83,18 +83,24 @@ object GraftFunctions {
     "scrub_pii" -> ((es: Seq[Expression]) => graft.text.PiiScrub(es(0)))
   )
 
+  /** Registers every function on `spark`; a repeat call registers
+    * nothing again.
+    */
   def register(spark: SparkSession): Unit =
     functions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, builder)
     }
 }
 
-/** SparkSessionExtensions plugin: inject every engine function at session
-  * build time (`spark.sql.extensions=graft.GraftExtensions`).
+/** SparkSessionExtensions plugin: inject every engine function and the
+  * point-in-polygon join's planner strategy at session build time
+  * (`spark.sql.extensions=graft.GraftExtensions`).
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.functions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftbridge.Bridge.injectFunction(e, name, builder)
     }
+    e.injectPlannerStrategy(_ => graft.ops.PointInPolygonStrategy)
+  }
 }

@@ -74,7 +74,11 @@ case class StGeomKey(child: Expression)
 
 /** (geomKey, polyWkb, x, y) -> boolean; prepared-geometry cache lookup by
   * the precomputed long key (no per-row WKB hashing), preparing from the
-  * WKB on first sight of a key.
+  * WKB on first sight of a key. It now serves only the shuffle path of
+  * [[graft.ops.SpatialJoin.pointInPolygon]] (`broadcastPolys = false`),
+  * as the refine of the sort-merge cell equi-join; the broadcast path
+  * tests in [[graft.ops.PointInPolygonJoinExec]] and reaches its testers
+  * by polygon index ([[PolygonTesters]]).
   */
 case class StPredicatePointKeyed(first: Expression, second: Expression,
     third: Expression, fourth: Expression, op: String)
@@ -89,16 +93,14 @@ case class StPredicatePointKeyed(first: Expression, second: Expression,
   }
 
   /** Real codegen with a LAZY binary child: this predicate runs once per
-    * candidate row of the spatial join — the round-3 CodegenFallback
+    * candidate row of the shuffle join — the round-3 CodegenFallback
     * boxed the key and both coords on EVERY row. Here the key/x/y are
     * unboxed and the WKB child's code is emitted INSIDE the cache-miss
     * branch, so the predicate itself reads the bytes only on a miss.
-    * That does not keep the join's hit path off the WKB: as a
-    * broadcast-hash-join condition, Spark evaluates every build-side
-    * column the condition references before the condition runs, so
-    * `getBinary` copies the polygon's WKB (about 800 B for a 48-vertex
-    * polygon) out of the build row for every candidate pair. Only in a
-    * plain projection or filter is the WKB child skipped on a hit.
+    * In a plain projection or filter the WKB child is skipped on a hit.
+    * The optimizer makes it the shuffle join's condition, though, and
+    * Spark evaluates every column a join condition references before
+    * the condition runs, so there each candidate copies the WKB.
     *
     * INVARIANT (required for codegen/interpreted agreement): the key
     * child MUST be `st_geom_key(geom)` over the SAME geometry child — a
@@ -361,7 +363,8 @@ object StPredicatePoint {
   def tester(wkb: Array[Byte]): PointTester =
     testerByKey(hashBytes(wkb), wkb)
 
-  def testerByKey(keyHash: Long, wkb: Array[Byte]): PointTester = {
+  /** The tester of `keyHash`; `wkb` is read only on a table miss. */
+  def testerByKey(keyHash: Long, wkb: => Array[Byte]): PointTester = {
     val hit = testerByKeyOrNull(keyHash)
     if (hit != null) hit else testerByKeyPut(keyHash, wkb)
   }
@@ -389,6 +392,27 @@ object StPredicatePoint {
   /** Predicate dispatch for interpreted eval and generated code. */
   def testPoint(t: PointTester, x: Double, y: Double, contains: Boolean): Boolean =
     if (contains) t.contains(x, y) else t.covers(x, y)
+}
+
+/** The testers of a fixed list of `n` polygons, reached by polygon index.
+  * Slot i is filled on its first use from the JVM-wide table in
+  * [[StPredicatePoint]], keyed by the polygon's [[StGeomKey]] `key(i)`,
+  * so the WKB `wkb(i)` is read only when that table misses and a tester
+  * is built once per JVM, not once per slot or task. Not thread-safe: one
+  * task owns one instance.
+  */
+final class PolygonTesters(n: Int, key: Int => Long, wkb: Int => Array[Byte]) {
+  private val slots = new Array[PointTester](n)
+
+  def apply(i: Int): PointTester = {
+    val t = slots(i)
+    if (t != null) t
+    else {
+      val filled = StPredicatePoint.testerByKey(key(i), wkb(i))
+      slots(i) = filled
+      filled
+    }
+  }
 }
 
 /** (minx, miny, maxx, maxy) -> WKB box polygon (shapely.geometry.box). */

@@ -138,23 +138,25 @@ case class SphericalCellId(left: Expression, right: Expression, res: Int,
     }
   }
 
-  /** Memoized transform (thread-local single-entry): several cell
-    * encoders over the same (x, y) row in one projection — h3 + s2, or
-    * multiple resolutions — pay for ONE inverse-TM + Helmert chain
-    * between them, with zero per-row allocation (a struct-returning
-    * encoder would materialize a row + boxed longs per call — ~100 B of
-    * garbage per input row, real GC pressure when every hardware thread
-    * is saturated).
+  /** Memoized transform (single-entry): several cell encoders over the
+    * same (x, y) row in one projection — h3 + s2, or multiple
+    * resolutions — pay for ONE inverse-TM + Helmert chain between them,
+    * with zero per-row allocation (a struct-returning encoder would
+    * materialize a row + boxed longs per call — ~100 B of garbage per
+    * input row). The memo is one field of the generated class, shared by
+    * its spherical encoders: a generated class serves one task thread,
+    * and the field costs no ThreadLocal lookup per row.
     */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val target = if (system == "h3") "graft.index.H3" else "graft.index.S2"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val m = ctx.freshName("memo")
+    val memo = "graftBngMemo"
+    ctx.addImmutableStateIfNotExists("double[]", memo,
+      v => s"$v = graft.index.Transform.newMemo();")
+    nullSafeCodeGen(ctx, ev, (x, y) =>
       s"""
-         |double[] $m = graft.index.Transform.bngToWgs84Memo($x, $y);
-         |${ev.value} = $target.cellId($m[2], $m[3], $res);
-       """.stripMargin
-    })
+         |graft.index.Transform.bngToWgs84Memo($x, $y, $memo);
+         |${ev.value} = $target.cellId($memo[2], $memo[3], $res);
+       """.stripMargin)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)

@@ -212,12 +212,6 @@ object Transform {
     out(1) = catmullRom(lo0, lo1, lo2, lo3, fy)
   }
 
-  /** Thread-local (lat, lng) scratch for [[bngToWgs84Memo]], so a memo
-    * miss writes the transform result here instead of allocating a
-    * 2-array per row.
-    */
-  private val tlBuf = ThreadLocal.withInitial[Array[Double]](() => new Array[Double](2))
-
   // Thread-local single-entry memo for the datum transform: when several
   // independent scalar expressions in ONE projection index the same row
   // (h3 cell + s2 cell + parents), each calls this instead of redoing
@@ -226,9 +220,10 @@ object Transform {
   // would return exactly the cached values anyway. Layout: e, n, lat,
   // lng. NaN inputs always miss (NaN != NaN) — still correct, just
   // uncached.
-  private val tlMemo = ThreadLocal.withInitial[Array[Double]](() => {
-    val a = new Array[Double](4); a(0) = Double.NaN; a(1) = Double.NaN; a
-  })
+  private val tlMemo = ThreadLocal.withInitial[Array[Double]](() => newMemo())
+
+  /** An empty (e, n, lat, lng) memo for [[bngToWgs84Memo]]. */
+  def newMemo(): Array[Double] = Array(Double.NaN, Double.NaN, 0.0, 0.0)
 
   /** Memoized [[bngToWgs84DegInto]]: returns the thread-local (e, n,
     * lat, lng) buffer, recomputing only when (e, n) differ from the
@@ -236,11 +231,17 @@ object Transform {
     */
   def bngToWgs84Memo(e: Double, n: Double): Array[Double] = {
     val m = tlMemo.get()
-    if (m(0) != e || m(1) != n) {
-      val ll = tlBuf.get()
-      bngToWgs84DegInto(e, n, ll)
-      m(0) = e; m(1) = n; m(2) = ll(0); m(3) = ll(1)
-    }
+    bngToWgs84Memo(e, n, m)
     m
   }
+
+  /** [[bngToWgs84Memo]] over a memo the caller owns ([[newMemo]]), for
+    * generated code: one memo field per generated class, read by every
+    * spherical encoder of that class, costs no ThreadLocal lookup per row.
+    */
+  def bngToWgs84Memo(e: Double, n: Double, m: Array[Double]): Unit =
+    if (m(0) != e || m(1) != n) {
+      bngToWgs84DegInto(e, n, m) // lat, lng into m(0), m(1)
+      m(2) = m(0); m(3) = m(1); m(0) = e; m(1) = n
+    }
 }

@@ -3,35 +3,44 @@ package graft.ops
 import graft.geo.GeoExpressions._
 import graft.index.IndexExpressions._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Cast, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DoubleType
 
 /** Cell-indexed spatial joins (graft operator J5, SURVEY.md §2.3).
-  * The point-in-polygon join is the classic PBSM filter-refine plan
-  * expressed declaratively so Catalyst keeps every optimization:
+  * The point-in-polygon join is the classic PBSM filter-refine plan:
   *
   *   1. FILTER: index both sides into BNG cells at `resolution`
-  *      (points: one cell via pure integer math; polygons: array of
-  *      intersecting cells, exploded) and equi-join on the packed cell id.
-  *   2. REFINE: exact JTS predicate on the candidate pairs.
+  *      (points: one cell via pure integer math; polygons: the array of
+  *      cells they intersect) and pair each point with the polygons
+  *      listed in its cell.
+  *   2. REFINE: the polygon's prepared point tester on each candidate.
   *
   * A point falls in exactly one cell, so a (point, polygon) pair meets
   * in at most one cell and needs no dedupe.
   *
-  * Scale shape: the join key is a long cell id, so the physical strategy
-  * is Catalyst's choice — broadcast-hash when the polygon side is small
-  * (the common dim-table case; we hint it explicitly), sort-merge on
-  * cell otherwise. At 10^12 rows the points side never shuffles more than
-  * once, and AQE + the salting helpers (Salting.scala) split hot cells.
-  * The radius and kNN joins below reuse the same cell-candidate idea.
+  * Scale shape: with the polygon side broadcast (the common dim-table
+  * case) both steps run in one operator, [[PointInPolygonJoinExec]],
+  * inside the point side's whole-stage codegen, so the points never
+  * shuffle. Otherwise the exploded polygon cells and the points meet in
+  * Catalyst's sort-merge join on the long cell id, which shuffles both
+  * sides once; only AQE's skew-join split acts on a hot cell there. The
+  * radius and kNN joins below reuse the same cell-candidate idea.
   */
 object SpatialJoin {
 
-  /** Points (x, y columns) vs polygons (WKB geometry column).
+  /** Points (x, y columns) vs polygons (WKB geometry column). The output
+    * is the point columns, then the polygon columns.
     *
     * @param points     left side with `pointId`, x, y columns
     * @param polygons   right side with `polyId` and `geomCol` WKB column
     * @param resolution BNG cell size in metres (10 km default per north rule)
-    * @param broadcastPolys hint broadcast for the indexed polygon side
+    * @param broadcastPolys broadcast the polygon side and join in one
+    *                   [[PointInPolygonJoinExec]]; false shuffles both
+    *                   sides into a cell equi-join
     * @param predicate  "covers" (closed boundaries, default) or "contains"
     */
   def pointInPolygon(
@@ -40,29 +49,46 @@ object SpatialJoin {
       resolution: Long = 10000L,
       broadcastPolys: Boolean = true,
       predicate: String = "covers"): DataFrame = {
-
-    // Polygon side: explode to one row per intersecting cell. Join key is
-    // the packed LONG cell id — string-keyed broadcast joins plateau at
-    // high parallelism (~1.1x from 8->32 threads, measured in BENCH.md);
-    // long keys probe ~3x faster and keep scaling. The geometry content
-    // hash is computed HERE (once per polygon-cell row on the tiny build
-    // side) so the refine's prepared-geometry cache never re-hashes WKB
-    // bytes per candidate row.
+    // The content hash keys the JVM-wide prepared-tester table; it is
+    // computed here, once per polygon, never per candidate.
     val polyCells = polygons
-      .withColumn("__cell__", explode(bng_index_ids(col(geomCol), resolution, "intersects")))
+      .withColumn("__cells__", bng_index_ids(col(geomCol), resolution, "intersects"))
       .withColumn("__gkey__", st_geom_key(col(geomCol)))
-    val polyIndexed = if (broadcastPolys) broadcast(polyCells) else polyCells
-
-    // Point side: single-cell fast path, no geometry allocation.
-    val ptCells = points.withColumn("__cell__",
-      bng_cell_id(col(x), col(y), resolution))
-
-    val refined = ptCells
-      .join(polyIndexed, Seq("__cell__"))
-      .filter(st_predicate_point_keyed(col("__gkey__"), col(geomCol),
-        col(x), col(y), predicate))
-      .drop("__cell__", "__gkey__")
-    refined
+    if (broadcastPolys) {
+      val spark = points.sparkSession
+      PointInPolygonStrategy.setup(spark)
+      val l = Bridge.plan(points)
+      // a polygon side derived from the points' plan can share attribute
+      // ids with it; fresh ids keep the join's output unambiguous
+      val polys = Bridge.plan(polyCells)
+      val r = if (polys.outputSet.intersect(l.outputSet).isEmpty) polys
+        else Project(polys.output.map(a => Alias(a, a.name)()), polys)
+      def attr(p: LogicalPlan, name: String): Attribute =
+        p.resolveQuoted(name, SQLConf.get.resolver) match {
+          case Some(a: Attribute) => a
+          case _ => throw new IllegalArgumentException(
+            s"no top-level column $name among ${p.output.map(_.name)}")
+        }
+      def coord(name: String): Expression = {
+        val a = attr(l, name)
+        if (a.dataType == DoubleType) a else Cast(a, DoubleType)
+      }
+      Bridge.frame(spark, PointInPolygonJoin(
+        coord(x), coord(y), attr(r, "__cells__"), attr(r, "__gkey__"), attr(r, geomCol),
+        resolution, predicate == "contains", l, r))
+    } else {
+      // Point side: single-cell fast path, no geometry allocation. The
+      // join key is the packed LONG cell id: long keys probe about 3x
+      // faster than string grid refs.
+      val ptCells = points.withColumn("__cell__", bng_cell_id(col(x), col(y), resolution))
+      val exploded = polyCells.withColumn("__cell__", explode(col("__cells__")))
+        .drop("__cells__")
+      ptCells
+        .join(exploded, Seq("__cell__"))
+        .filter(st_predicate_point_keyed(col("__gkey__"), col(geomCol),
+          col(x), col(y), predicate))
+        .drop("__cell__", "__gkey__")
+    }
   }
 
   /** Radius (range) join: every (query, point) pair within `radius`

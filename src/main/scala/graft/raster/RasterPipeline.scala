@@ -205,8 +205,11 @@ object RasterPipeline {
     CellScan.frame(spark, store.tiles(), schema) { refs =>
       val out = new CellRows(5)
       val st = new TileStore(path)
+      // one decode buffer for every region of this partition
+      val region = new Array[Byte](tileCells * tileCells * Samples.bytesPer(spec.dtype))
       refs.flatMap { ref =>
-        val cells = st.readCells(ref, column, spec.dtype, spec.nodata, tileCells * tileCells)
+        val cells = st.readCells(ref, column, spec.dtype, spec.nodata, tileCells * tileCells,
+          region)
         val tile = UTF8String.fromString(ref)
         val (minx, _, _, maxy) = graft.index.Bng.bounds(ref)
         out.rows(cells.size) { k =>

@@ -127,8 +127,14 @@ class TileStore(val path: String) {
     }
   }
 
-  /** One region's decompressed little-endian bytes. */
-  private def regionBytes(tileRef: String, column: String): ByteBuffer = {
+  /** One region's decompressed little-endian bytes: the first `limit`
+    * bytes of the returned buffer. A one-shot Zstd frame that fits in
+    * `reuse` decodes into it (its capacity can exceed the region), so a
+    * caller decoding many regions on one thread passes one array for
+    * all of them; anything else decodes into a fresh array.
+    */
+  private def regionBytes(tileRef: String, column: String,
+      reuse: Array[Byte] = Array.emptyByteArray): ByteBuffer = {
     val raw = Files.readAllBytes(Paths.get(path, s"tile=$tileRef", s"$column.bin"))
     // Frame sniff: Zstd magic 28 B5 2F FD; anything else is a round-1
     // DEFLATE region.
@@ -137,36 +143,49 @@ class TileStore(val path: String) {
     // A one-shot frame records its content size and decodes in one call;
     // streamed frames and DEFLATE regions decode through a stream.
     val size = if (isZstd) com.github.luben.zstd.Zstd.getFrameContentSize(raw) else -1L
-    val bytes =
-      if (size >= 0 && size <= Int.MaxValue) com.github.luben.zstd.Zstd.decompress(raw, size.toInt)
-      else {
-        val src = new java.io.ByteArrayInputStream(raw)
-        val in =
-          if (isZstd) new com.github.luben.zstd.ZstdInputStreamNoFinalizer(src)
-          else new java.util.zip.InflaterInputStream(src)
-        try in.readAllBytes() finally in.close()
+    val (bytes, length) =
+      if (size >= 0 && size <= reuse.length) {
+        val n = com.github.luben.zstd.Zstd.decompressByteArray(
+          reuse, 0, size.toInt, raw, 0, raw.length)
+        if (com.github.luben.zstd.Zstd.isError(n))
+          throw new IllegalStateException(s"tile $tileRef: region '$column': " +
+            com.github.luben.zstd.Zstd.getErrorName(n))
+        (reuse, n.toInt)
+      } else {
+        val b =
+          if (size >= 0 && size <= Int.MaxValue) com.github.luben.zstd.Zstd.decompress(raw, size.toInt)
+          else {
+            val src = new java.io.ByteArrayInputStream(raw)
+            val in =
+              if (isZstd) new com.github.luben.zstd.ZstdInputStreamNoFinalizer(src)
+              else new java.util.zip.InflaterInputStream(src)
+            try in.readAllBytes() finally in.close()
+          }
+        (b, b.length)
       }
-    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+    ByteBuffer.wrap(bytes, 0, length).order(ByteOrder.LITTLE_ENDIAN)
   }
 
   /** The full grid of one region, nodata cells included. */
   def readRegion(tileRef: String, column: String, dtype: String): Array[Double] = {
     val bb = regionBytes(tileRef, column)
-    Samples.decode(bb, dtype, bb.capacity / Samples.bytesPer(dtype))
+    Samples.decode(bb, dtype, bb.limit / Samples.bytesPer(dtype))
   }
 
   /** Only the non-nodata cells (NaN-safe) of one region of `cells` cells,
     * as parallel index/value arrays — the read-back path, whose cost
     * follows the burned cells rather than the tile area. Fails, naming
     * the tile, when the region does not decode to exactly `cells` cells.
+    * `reuse` is a decode buffer a caller on one thread keeps across
+    * regions (see [[regionBytes]]).
     */
   def readCells(tileRef: String, column: String, dtype: String, nodata: Double,
-      cells: Int): SparseCells = {
-    val bb = regionBytes(tileRef, column)
+      cells: Int, reuse: Array[Byte] = Array.emptyByteArray): SparseCells = {
+    val bb = regionBytes(tileRef, column, reuse)
     val expected = cells.toLong * Samples.bytesPer(dtype)
-    if (bb.capacity != expected)
+    if (bb.limit != expected)
       throw new IllegalStateException(s"tile $tileRef: region '$column' decodes to " +
-        s"${bb.capacity} bytes, expected $expected ($cells $dtype cells)")
+        s"${bb.limit} bytes, expected $expected ($cells $dtype cells)")
     Samples.nonNodata(bb, dtype, cells, nodata)
   }
 

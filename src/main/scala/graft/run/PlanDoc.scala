@@ -7,7 +7,7 @@ object PlanDoc {
     val dir = "/root/testdata/sf0.001"
     val interesting = Seq(
       "q3_filter_pushdown" -> "filter pushdown + column pruning reach the scan",
-      "q14_spatial_join" -> "cell-indexed PIP join: exploded polygon side broadcast, long cell keys",
+      "q14_spatial_join" -> "cell-indexed PIP join: one PointInPolygonJoin probe in the point side's codegen stage over the broadcast polygon rows (IdentityBroadcastMode)",
       "q13_tile_counts" -> "two-phase tile aggregation (map-side partial)",
       "q16_raster_burn" -> "range-partitioned streaming burn",
       "q20_minhash_lsh" -> "MinHash LSH banding: signature once, band explode, self-join",

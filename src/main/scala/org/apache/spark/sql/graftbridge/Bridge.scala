@@ -4,6 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.StructType
 
@@ -18,12 +19,16 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Register a session-level SQL function backed by a Catalyst
-    * expression builder (sessionState is private[sql]).
+    * expression builder (sessionState is private[sql]), unless `name`
+    * already holds this very builder.
     */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "scala_udf")
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val held = registry.lookupFunctionBuilder(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name))
+    if (!held.contains(builder)) registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 
   /** Inject a function through SparkSessionExtensions (plugin path). */
   def injectFunction(e: org.apache.spark.sql.SparkSessionExtensions,
@@ -42,4 +47,15 @@ object Bridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
+
+  /** A frame's analyzed logical plan. */
+  def plan(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed
+
+  /** A frame over a logical plan: the session's `Dataset.ofRows`
+    * (private[sql]).
+    */
+  def frame(spark: org.apache.spark.sql.SparkSession, plan: LogicalPlan): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -157,6 +157,43 @@ class GeoExprSpec extends SparkSpec {
     assert(failures.distinct.size == 1, failures)
   }
 
+  test("h3/s2 point encoders agree with and without codegen, sharing one transform memo") {
+    import graft.index.IndexExpressions._
+    val xMax = graft.core.Constants.BngXMax.toDouble
+    val yMax = graft.core.Constants.BngYMax.toDouble
+    val rnd = new scala.util.Random(13)
+    // inside the canvas, on its edges and outside it (the exact transform)
+    val pts = Seq((0.0, 0.0), (530000.0, 180000.0), (xMax, yMax), (-1000.0, 5.0),
+      (800000.0, 1400000.0), (-250000.0, -90000.0), (699999.5, 1299999.5)) ++
+      Seq.fill(300)((rnd.nextDouble() * xMax, rnd.nextDouble() * yMax))
+    // an RDD source, so the optimizer cannot evaluate the projection
+    // itself; rows with equal (x, y) in a row hit the memo
+    val df = spark.sparkContext.parallelize((pts ++ pts.take(3)).zipWithIndex.map {
+      case ((x, y), i) => (i.toLong, x, y) }, 3).toDF("id", "x", "y")
+    def encode(codegen: String) = {
+      spark.conf.set("spark.sql.codegen.factoryMode", codegen)
+      spark.conf.set("spark.sql.codegen.wholeStage", codegen == "CODEGEN_ONLY")
+      // swapped (y, x) encoders between the (x, y) ones of one projection
+      try df.select(col("id"), h3_index_point(col("x"), col("y"), 9),
+          s2_index_point(col("y"), col("x"), 12), s2_index_point(col("x"), col("y"), 12),
+          h3_index_point(col("y"), col("x"), 9), h3_index_point(col("x"), col("y"), 12))
+        .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+    val gen = encode("CODEGEN_ONLY")
+    assert(gen == encode("NO_CODEGEN"))
+    (pts ++ pts.take(3)).zipWithIndex.foreach { case ((x, y), i) =>
+      val (lat, lng) = graft.index.Transform.bngToWgs84Deg(x, y)
+      val (latS, lngS) = graft.index.Transform.bngToWgs84Deg(y, x)
+      assert(gen(i.toLong) == Seq(graft.index.H3.cellId(lat, lng, 9),
+        graft.index.S2.cellId(latS, lngS, 12), graft.index.S2.cellId(lat, lng, 12),
+        graft.index.H3.cellId(latS, lngS, 9), graft.index.H3.cellId(lat, lng, 12)), s"($x, $y)")
+    }
+  }
+
   test("a NaN coordinate is covered and contained by nothing (st_covers_point, pointInPolygon)") {
     val shapes = Seq(Wkb.box(0, 0, 5000, 5000),
       Wkb.readWkt("POLYGON ((0 0, 10 0, 10 10, 5 12, 0 10, 0 0))"))

@@ -21,7 +21,7 @@ class PlanSpec extends SparkSpec {
 
   test("q14 spatial join: polygon side broadcast, point scan pruned to keys") {
     val p = plan("q14_spatial_join")
-    assert(p.contains("BroadcastHashJoin"), p.take(2000))
+    assert(p.contains("PointInPolygonJoin") && p.contains("BroadcastExchange"), p.take(2000))
     assert(p.contains("ReadSchema: struct<doc_id:bigint>"))
     assert(!p.contains("SortMergeJoin"))
   }
@@ -30,12 +30,11 @@ class PlanSpec extends SparkSpec {
     import graft.index.IndexExpressions._
     import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    // the headline job's point side: cell encoders, then the join's own
-    // bng_cell_id; a CodegenFallback among them keeps the Project out of
-    // the stage and runs it through boxed eval calls
+    // the headline job's point side: cell encoders; a CodegenFallback
+    // among them keeps the Project out of the stage and runs it through
+    // boxed eval calls
     val pts = spark.range(0, 4000, 1, 4)
       .select(col("id"), (col("id") * 317.0 % 700000).as("x"), (col("id") * 631.0 % 1300000).as("y"))
       .withColumn("h3_9", h3_index_point(col("x"), col("y"), 9))
@@ -60,14 +59,13 @@ class PlanSpec extends SparkSpec {
       case other => (other, staged) +: other.children.flatMap(inStage(_, staged))
     }
     val staged = inStage(plan, staged = false)
-    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    val joins = plan.collect { case j: graft.ops.PointInPolygonJoinExec => j }
     assert(joins.size == 1, plan.treeString)
-    val streamed = joins.head.buildSide match {
-      case org.apache.spark.sql.catalyst.optimizer.BuildRight => joins.head.left
-      case _ => joins.head.right
-    }
+    assert(staged.exists { case (q, s) => (q eq joins.head) && s },
+      s"point-in-polygon join outside whole-stage codegen:\n${plan.treeString}")
+    val streamed = joins.head.left
     val pointSide = streamed.collect { case p: ProjectExec => p }
-    assert(pointSide.exists(_.projectList.exists(_.name == "__cell__")), plan.treeString)
+    assert(pointSide.exists(_.projectList.exists(_.name == "h3_9")), plan.treeString)
     pointSide.foreach { p =>
       assert(staged.exists { case (q, s) => (q eq p) && s },
         s"point-side Project outside whole-stage codegen:\n${plan.treeString}")
